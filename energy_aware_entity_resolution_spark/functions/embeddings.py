@@ -72,8 +72,12 @@ def cosine_col(a: Column, b: Column, dim: int | None = None) -> Column:
     (A fully unrolled 64-term arithmetic chain was tried first: it wins
     3x on a plain per-row projection but collapses whole-stage codegen
     on join stages — 3.6x SLOWER per pair; see OPTIMIZATION_r06.md.)
-    Only valid when every array has exactly ``dim`` elements — an
-    element_at past the end yields null (the fold would ignore it)."""
+    Only valid when every array has exactly ``dim`` elements. A
+    shorter array makes element_at read past the end: under ANSI mode
+    (the Spark 4 default) that raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT;
+    with ANSI off it yields null, which nulls the whole dot product (or
+    norm), so the scoring clamp silently turns the cosine into 0. A
+    longer array is silently truncated to its first ``dim`` elements."""
     return dot_col(a, b, dim)
 
 

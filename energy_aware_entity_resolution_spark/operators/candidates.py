@@ -61,8 +61,10 @@ def lsh_pairs(bands: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """J8: within-block pairs of the capped band table.
 
     Shape: (1) ONE exchange+sort of the band table, over which a
-    window COUNT per band key sizes every band exactly (sort-based —
-    no aggregation buffer ever holds a band's membership), (2) the cap
+    window COUNT per band key sizes every band exactly (sort-based: no
+    collect_set ever holds an over-cap band's ids, but WindowExec still
+    sorts and buffers each band's whole row set in ONE task — a hot
+    band lands in a single task's spillable buffer), (2) the cap
     filter, (3) a groupBy on the same key (partitioning reused, no
     second Exchange) collecting the ≤ max_block member ids and
     exploding each block's C(m,2) pairs with a JVM array
@@ -99,7 +101,8 @@ def lsh_pairs(bands: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # exchange+sort, and the collect_set groupBy reuses its
     # partitioning (guide §2.4 "two operations keyed the same way share
     # one exchange"). Same cap semantics: _n is the exact band size,
-    # and no aggregation buffer ever holds an over-cap band's members.
+    # and no collect_set holds an over-cap band's members — though the
+    # window itself buffers each band's rows in one task (spillable).
     # Measured 7.4 -> 5.4 s on the 7.7M-row band table
     # (OPTIMIZATION_r06.md).
     w_band = Window.partitionBy("band_id", "band_hash")

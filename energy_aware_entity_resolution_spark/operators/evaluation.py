@@ -39,30 +39,6 @@ def pairwise_metrics(matches: DataFrame, labeled: DataFrame) -> dict:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": precision, "recall": recall, "f1": f1}
 
 
-def pairwise_metrics_bis(
-    matches: DataFrame, labeled: DataFrame, truth_pairs: DataFrame
-) -> dict:
-    """`_bis` variant (E3, reference evaluation.py:241-270): metrics
-    restricted to predicted pairs touching at least one ground-truth
-    node — separates 'wrong pair among known entities' from 'pair about
-    entities evaluation knows nothing of'."""
-    nodes = (
-        truth_pairs.select(F.col("conv_id_a").alias("conv_id"))
-        .union(truth_pairs.select(F.col("conv_id_b").alias("conv_id")))
-        .distinct()
-    )
-    touching = matches.join(
-        nodes.select(F.col("conv_id").alias("conv_id_a")), "conv_id_a", "left_semi"
-    ).union(
-        matches.join(
-            nodes.select(F.col("conv_id").alias("conv_id_b")),
-            "conv_id_b",
-            "left_semi",
-        )
-    ).dropDuplicates(["conv_id_a", "conv_id_b"])
-    return pairwise_metrics(touching, labeled)
-
-
 def score_label_histogram(
     scored: DataFrame, truth_pairs: DataFrame, bins: int = 20
 ) -> DataFrame:

@@ -6,15 +6,8 @@ otherwise need; kept together so the coverage is auditable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def parse_idx_suffix_col(col: Column) -> Column:
-    """P7: "idx__123" -> 123 (tolerant of trailing '.0'; reference
-    utils/utils.py:191-202)."""
-    # regexp_extract yields '' on no match; try_cast -> NULL (ANSI mode)
-    return F.regexp_extract(col, r"__(\d+)(?:\.0)?$", 1).try_cast("long")
 
 
 def cross_source_filter(pairs: DataFrame, entities: DataFrame) -> DataFrame:
@@ -39,21 +32,6 @@ def cross_source_filter(pairs: DataFrame, entities: DataFrame) -> DataFrame:
     )
 
 
-def common_neighbor_validation(edges: DataFrame) -> DataFrame:
-    """D9: pairs of records that share at least one similar neighbor
-    (reference similaritylist.py:182-196 probes two ids' lists for
-    overlap). edges: (src, dst, score). Output: (conv_id_a, conv_id_b,
-    n_common) for pairs with >= 1 common neighbor."""
-    e1 = edges.select(F.col("src").alias("conv_id_a"), F.col("dst").alias("nbr"))
-    e2 = edges.select(F.col("src").alias("conv_id_b"), F.col("dst").alias("nbr"))
-    return (
-        e1.join(e2, "nbr")
-        .where(F.col("conv_id_a") < F.col("conv_id_b"))
-        .groupBy("conv_id_a", "conv_id_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-
-
 def load_ground_truth_csv(spark: SparkSession, path: str) -> DataFrame:
     """S9: parse `a,b` match-pair lines (reference
     dataprocessing/evaluation.py:15-29, including its '_'→'__' id
@@ -65,50 +43,3 @@ def load_ground_truth_csv(spark: SparkSession, path: str) -> DataFrame:
         F.greatest(fix(F.col("a")), fix(F.col("b"))).alias("conv_id_b"),
         F.lit(1).alias("label"),
     ).dropDuplicates(["conv_id_a", "conv_id_b"])
-
-
-def train_word2vec_embeddings(
-    features: DataFrame,
-    dim: int = 64,
-    min_count: int = 1,
-    seed: int = 42,
-    tokens_col: str = "rare_tokens",
-) -> DataFrame:
-    """G5 opt-in: Spark MLlib Word2Vec over token 'sentences' — the
-    walk-free analog of the reference's gensim training
-    (dynamic_embedding/dynamic_embeddings.py:8-81). NOT the default:
-    MLlib Word2Vec is seeded but its multi-partition training is not
-    bit-reproducible across cluster layouts, which breaks this
-    engine's determinism contract (SURVEY.md §7.3); the feature-hash
-    embedding is. Returns (conv_id, w2v_vec)."""
-    from pyspark.ml.feature import Word2Vec
-
-    w2v = Word2Vec(
-        vectorSize=dim,
-        minCount=min_count,
-        seed=seed,
-        inputCol=tokens_col,
-        outputCol="w2v_raw",
-    )
-    model = w2v.fit(features.select(tokens_col))
-    out = model.transform(features.select("conv_id", tokens_col))
-    from pyspark.ml.functions import vector_to_array
-
-    return out.select(
-        "conv_id", vector_to_array("w2v_raw").cast("array<float>").alias("w2v_vec")
-    )
-
-
-def predict_pairs_stub(pairs: DataFrame, model_path: str | None = None) -> DataFrame:
-    """M7 torch-BERT surface: raises by declaration (no torch in this
-    environment). The WORKING inference skeleton — broadcast
-    sklearn-style scorer through an iterator pandas UDF, the wiring a
-    torch model would reuse — is operators.pair_classifier
-    (classify_pairs / make_pair_scorer_udf), tested with a toy
-    logistic model."""
-    if model_path is None:
-        raise NotImplementedError(
-            "PLM pair classification needs a trained model + torch; "
-            "supply model_path in an environment that has them"
-        )
-    raise NotImplementedError("model loading not available in this environment")

@@ -20,23 +20,13 @@ dynamic_entity_resolution.py:10-215) with Spark-native strategies:
   ulp, so the oracle checks the sampled variant and pytest checks
   refined recall). n_cells=None derives N / target_cell_rows; queries
   probe their nprobe nearest cells.
-- block_topk_applyinpandas: per-block NumPy matmul top-k — the direct
-  analog of the reference's blocked `E_block @ E.T` kernel
-  (dynamic_entity_resolution.py:161-215), but per blocking key inside
-  applyInPandas, never a global driver matrix.
-- pq_*: product quantization (Jégou et al. TPAMI'11) — vectors
-  compressed to m one-byte codes, asymmetric-distance search via
-  broadcast lookup tables, optional exact rerank of the ADC shortlist
-  (the FAISS IVF-PQ pattern, the billion-vector scale path).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -48,14 +38,6 @@ from energy_aware_entity_resolution_spark.functions.embeddings import (
 from energy_aware_entity_resolution_spark.functions.portable_hash import (
     md5_hash60_col,
 )
-
-
-def _id_type(df: DataFrame, id_col: str) -> str:
-    """Spark type string of the id column — ANN output schemas carry
-    the INPUT's id type (long for the synthetic fixtures, string for
-    the pipeline's natural conv_id key), so real pipeline embeddings
-    flow through PQ/IVF-PQ/block_topk without a caller-side remap."""
-    return df.schema[id_col].dataType.simpleString()
 
 
 def _dim_of(df: DataFrame, vec_col: str) -> int | None:
@@ -493,540 +475,3 @@ def ivf_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-def block_topk_applyinpandas(
-    vectors: DataFrame,
-    block_col: str,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-block exact top-k with a vectorized NumPy kernel — the
-    reference's blocked matmul (topk_all_cosine) re-hosted inside
-    applyInPandas so each block is one executor-local matrix."""
-
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        if ids.dtype == object:  # string ids: lexsort needs unicode dtype
-            ids = ids.astype("U")
-        mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = mat / norms
-        sims = unit @ unit.T
-        np.fill_diagonal(sims, -np.inf)
-        n = len(ids)
-        kk = min(k, n - 1)
-        rows = []
-        if kk > 0:
-            # argpartition then exact order — same partial-sort trick
-            # as the reference kernel
-            part = np.argpartition(-sims, kth=kk - 1, axis=1)[:, :kk]
-            for r in range(n):
-                cand = part[r]
-                order = np.lexsort((ids[cand], -sims[r, cand]))
-                for rank, ci in enumerate(cand[order], start=1):
-                    rows.append((ids[r], ids[ci], round(float(sims[r, ci]), 6), rank))
-        return pd.DataFrame(
-            rows, columns=["query_id", "neighbor_id", "cosine", "rank"]
-        )
-
-    idt = _id_type(vectors, id_col)
-    return (
-        vectors.select(F.col(block_col).alias("_blk"), id_col, vec_col)
-        .groupBy("_blk")
-        .applyInPandas(
-            per_block,
-            schema=f"query_id {idt}, neighbor_id {idt}, cosine double, rank int",
-        )
-    )
-
-
-# ------------------------------------------------------------------ PQ
-# Driver guards for pq_topk's query-side collect — same adaptivity
-# principle as the remap/CC driver fast paths: the LUT build is
-# driver-side by design (broadcast), so an oversized query table must
-# fail fast, not OOM.
-_PQ_QUERY_MAX_ROWS = 100_000
-_PQ_QUERY_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _pq_query_luts(
-    queries: DataFrame, codebooks: list, id_col: str, vec_col: str
-) -> tuple[list, np.ndarray, np.ndarray] | None:
-    """Guarded driver-side ADC lookup-table build shared by pq_topk and
-    ivf_pq_topk: (query ids, LUT[q, j, c] = <query_q sub_j,
-    codebook_j[c]>, query matrix), or None for an empty query table.
-    Raises on query tables above the row/byte guards
-    (broadcastable-queries contract — same fail-fast principle as the
-    remap/CC driver paths). The query matrix rides along for the
-    residual IVF-PQ bias term (<q, centroid_cell>)."""
-    q = (
-        queries.select(F.col(id_col).alias("_qid"), F.col(vec_col).alias("_qv"))
-        .limit(_PQ_QUERY_MAX_ROWS + 1)
-        .collect()
-    )
-    if len(q) > _PQ_QUERY_MAX_ROWS:
-        raise ValueError(
-            f"pq_topk: queries table exceeds {_PQ_QUERY_MAX_ROWS} rows — "
-            "the per-query ADC LUTs are driver-built and broadcast, so "
-            "the query side must be small. Split the query table into "
-            "chunks or use bucketed_topk/ivf_topk for large query sets."
-        )
-    if not q:
-        return None
-    probe = q[:1000]
-    avg = sum(8 * len(r["_qv"]) for r in probe) / len(probe)
-    if avg * len(q) > _PQ_QUERY_MAX_BYTES:
-        raise ValueError(
-            f"pq_topk: queries table exceeds ~{_PQ_QUERY_MAX_BYTES} "
-            "vector bytes — the driver-built LUTs would not be safely "
-            "broadcastable. Split the query table into chunks."
-        )
-    qids = [r["_qid"] for r in q]
-    qmat = np.array([r["_qv"] for r in q], dtype=np.float64)
-    m = len(codebooks)
-    sub = codebooks[0].shape[1]
-    lut = np.stack(
-        [qmat[:, j * sub : (j + 1) * sub] @ codebooks[j].T for j in range(m)],
-        axis=1,
-    )
-    return qids, lut, qmat
-
-
-def _exact_rerank(
-    shortlist: DataFrame,
-    queries: DataFrame,
-    rerank_with: DataFrame,
-    topk: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Exact-cosine rerank of an ADC shortlist (the FAISS refine step):
-    the small shortlist joins its full vectors, query vectors broadcast
-    from the small queries table, exact cosine re-orders to topk."""
-    dim = _dim_of(rerank_with, vec_col)
-    vecs = _with_vec_norm(
-        rerank_with.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nv")
-        ),
-        "_nv",
-        dim,
-        "_v",
-    ).drop("_nv")
-    qvecs = _with_vec_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        "_qv",
-        dim,
-        "_q",
-    ).drop("_qv")
-    exact = (
-        shortlist.drop("rank")
-        .join(vecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cosine_prenorm(
-                F.col("_qd"), F.col("_vd"), F.col("_qn"), F.col("_vn"), dim
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= topk)
-    )
-
-
-def pq_codebooks(
-    vectors: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_rows: int = 4096,
-    iters: int = 10,
-) -> list:
-    """Product-quantization codebooks: the vector space split into m
-    subspaces, each with a k-entry codebook — the standard compressed
-    ANN representation for billion-vector corpora (Jégou et al., "Product
-    Quantization for Nearest Neighbor Search", TPAMI'11; FAISS IVF-PQ —
-    the scale successor of the reference's flat index).
-
-    Training: a deterministic hash-ordered sample of train_rows vectors
-    (same scale-safe TakeOrdered policy as ivf_centroids: never a
-    global sort, reproducible at any parallelism) collects to the
-    driver — train_rows * dim doubles, tiny — and each subspace runs
-    `iters` Lloyd steps of numpy k-means seeded from the first k sample
-    rows. Untrained codebooks (iters=0) quantize real data too coarsely
-    to rank neighbors. Returns a driver-side list of m (k, sub_dim)
-    numpy arrays — m*k*sub_dim floats, trivially broadcastable."""
-    sample = (
-        vectors.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(md5_hash60_col(F.col("_id").cast("string")), F.col("_id"))
-        .limit(train_rows)
-        .collect()
-    )
-    if not sample:
-        raise ValueError("pq_codebooks: empty vector table")
-    mat = np.array([r["_v"] for r in sample], dtype=np.float64)
-    dim = mat.shape[1]
-    sub = dim // m
-    assert sub * m == dim, f"dim {dim} not divisible by m={m}"
-    books = []
-    for j in range(m):
-        d = mat[:, j * sub : (j + 1) * sub]
-        cb = d[: min(k, len(d))].copy()
-        for _ in range(iters):
-            dist = (
-                (d * d).sum(1, keepdims=True)
-                - 2.0 * d @ cb.T
-                + (cb * cb).sum(1)[None, :]
-            )
-            assign = dist.argmin(1)
-            for c in range(len(cb)):
-                members = d[assign == c]
-                if len(members):
-                    cb[c] = members.mean(0)
-        books.append(cb)
-    return books
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): each vector compressed to m one-byte
-    codes (nearest codebook entry per subspace, L2). mapInPandas with
-    the broadcast codebooks — one numpy argmin per subspace per Arrow
-    batch, no shuffle; at 100 TB this turns a 256-byte float64 vector
-    into m bytes."""
-    spark = vectors.sparkSession
-    bc = spark.sparkContext.broadcast([c.tolist() for c in codebooks])
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books = [np.asarray(c) for c in bc.value]
-        m = len(books)
-        sub = books[0].shape[1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for j, cb in enumerate(books):
-                d = mat[:, j * sub : (j + 1) * sub]
-                # ||x - c||² argmin via the dot-product expansion
-                dist = (
-                    (d * d).sum(1, keepdims=True)
-                    - 2.0 * d @ cb.T
-                    + (cb * cb).sum(1)[None, :]
-                )
-                codes[:, j] = dist.argmin(1)
-            yield pd.DataFrame(
-                {"_id": pdf[id_col], "codes": list(codes)}
-            ).rename(columns={"_id": id_col})
-
-    return vectors.mapInPandas(
-        op, schema=f"{id_col} {_id_type(vectors, id_col)}, codes array<long>"
-    )
-
-
-def pq_topk(
-    codes: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rerank_with: DataFrame | None = None,
-    oversample: int = 4,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) approximate top-k: each query builds
-    one (m, k) lookup table of sub-space dot products against the
-    codebooks; a compressed vector's approximate similarity is m table
-    gathers — no decompression, no full-vector math. The query LUTs
-    broadcast (|queries| * m * k floats); the big codes table streams
-    through mapInPandas emitting per-batch candidates, and a window
-    keeps the global top-k per query. Output: (query_id, neighbor_id,
-    approx_dot, rank).
-
-    PQ approximates the INNER PRODUCT — for cosine search feed
-    unit-normalized vectors. rerank_with=the full vector table opts
-    into the production shortlist pattern: ADC retrieves
-    topk*oversample candidates per query, the (small) shortlist joins
-    its exact vectors and exact cosine re-ranks to topk — compressed
-    scan over the corpus, exact math only on the shortlist. Output
-    then carries `cosine` instead of `approx_dot`.
-
-    CONTRACT: queries must be driver-collectable — the LUTs broadcast
-    from the driver (same contract as brute_force_topk's broadcast
-    side). Guarded like the remap/CC driver paths: above
-    _PQ_QUERY_MAX_ROWS rows or ~_PQ_QUERY_MAX_BYTES of vector bytes
-    the call raises immediately instead of silently OOMing the driver;
-    split the query table or use bucketed/ivf search for query sets
-    that large."""
-    spark = codes.sparkSession
-    idt = _id_type(codes, id_col)
-    luts = _pq_query_luts(queries, codebooks, id_col, vec_col)
-    if luts is None:  # no queries -> empty result with the right schema
-        out_schema = (
-            f"query_id {idt}, neighbor_id {idt}, "
-            + ("cosine double" if rerank_with is not None else "approx_dot double")
-            + ", rank int"
-        )
-        return spark.createDataFrame([], out_schema)
-    qids, lut, _ = luts
-    m = len(codebooks)
-    bc = spark.sparkContext.broadcast((qids, lut.tolist()))
-    # each Arrow batch must surface the FULL shortlist size, not just
-    # topk — per-batch truncation at topk would starve the rerank
-    # shortlist whenever the codes table has few partitions
-    shortlist_k = topk * oversample if rerank_with is not None else topk
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, lut_ = bc.value
-        lut_ = np.asarray(lut_)  # (nq, m, k)
-        nq = len(qids_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            # scores[n, nq] = sum_j LUT[q, j, codes[n, j]]
-            scores = np.zeros((len(pdf), nq), dtype=np.float64)
-            for j in range(m):
-                scores += lut_[:, j, :][:, cmat[:, j]].T
-            ids = pdf[id_col].to_numpy()
-            # +1: a corpus query's own row always ranks first (dot with
-            # itself) and is filtered below — without the extra slot it
-            # would consume one shortlist position and a single-partition
-            # no-rerank search would return topk-1 neighbors
-            kk = min(shortlist_k + 1, len(ids))
-            rows = []
-            for qi in range(nq):
-                cand = np.argpartition(-scores[:, qi], kth=kk - 1)[:kk]
-                for ci in cand:
-                    if ids[ci] != qids_[qi]:
-                        rows.append(
-                            (qids_[qi], ids[ci], round(float(scores[ci, qi]), 6))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["query_id", "neighbor_id", "approx_dot"]
-            )
-
-    cand = codes.mapInPandas(
-        op, schema=f"query_id {idt}, neighbor_id {idt}, approx_dot double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= shortlist_k)
-    )
-    if rerank_with is None:
-        return shortlist
-    # query vectors come from the SMALL queries table (broadcastable);
-    # rerank_with is the full corpus and only serves neighbor lookups
-    return _exact_rerank(shortlist, queries, rerank_with, topk, id_col, vec_col)
-
-
-def _residual_vectors(
-    vectors_owned: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, residual vec, cell_id): r = x - centroid(cell(x)), the
-    quantity residual IVF-PQ encodes (Jégou et al. TPAMI'11 §V —
-    residual energy ≪ vector energy on clustered data, so the same
-    m-byte budget quantizes much finer). Pure JVM zip_with over the
-    broadcast centroid join — no UDF, no shuffle of the big side."""
-    return vectors_owned.join(F.broadcast(centroids), "cell_id").select(
-        id_col,
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("cv").cast("array<double>"),
-            lambda x, c: (x - c).cast("float"),
-        ).alias(vec_col),
-        "cell_id",
-    )
-
-
-def ivf_pq_residual_codebooks(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_rows: int = 4096,
-    iters: int = 10,
-) -> list:
-    """PQ codebooks trained on IVF RESIDUALS (x - centroid(x)) — the
-    production IVF-PQ layout shares ONE residual codebook set across
-    cells (Jégou TPAMI'11 §V), so the ADC LUT build stays per-query,
-    not per-(query, cell)."""
-    owned = ivf_assign(vectors, None, id_col, vec_col, centroids=centroids)
-    res = _residual_vectors(owned, centroids, id_col, vec_col)
-    return pq_codebooks(
-        res.select(id_col, vec_col), m, k, id_col, vec_col, train_rows, iters
-    )
-
-
-def ivf_pq_candidates(
-    codes: DataFrame,
-    owned: DataFrame,
-    query_probes: DataFrame,
-    id_col: str = "vec_id",
-    keep_cell: bool = False,
-) -> DataFrame:
-    """Cell-pruned (query_id, neighbor codes) candidates — the
-    inverted-list layout of FAISS IVF-PQ as an equi-join: codes gain
-    their owning cell, queries fan out to their nprobe probed cells,
-    and the join on cell_id IS the inverted-list lookup. Candidate
-    count per query ≈ nprobe × N / n_cells instead of N — both the
-    scan and the ADC compute shrink by the cell-pruning factor.
-    Exposed separately so callers (and tests) can measure the scanned
-    candidate count. keep_cell=True retains the candidate's OWNING
-    cell_id (the residual path needs it for the <q, centroid> bias)."""
-    inv = codes.join(owned.select(id_col, "cell_id"), id_col)
-    qp = query_probes.select("cell_id", F.col(id_col).alias("query_id"))
-    cols = ["query_id", F.col(id_col).alias("neighbor_id"), "codes"]
-    if keep_cell:
-        cols.append(F.col("cell_id"))
-    return (
-        inv.join(qp, "cell_id")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(*cols)
-    )
-
-
-def ivf_pq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    topk: int = 5,
-    n_cells: int | None = None,
-    nprobe: int = 1,
-    centroids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes: DataFrame | None = None,
-    rerank_with: DataFrame | None = None,
-    oversample: int = 4,
-    target_cell_rows: int = 4096,
-    residual: bool = False,
-) -> DataFrame:
-    """IVF-PQ: the ADC scan cell-pruned to each query's nprobe nearest
-    coarse cells — the actual billion-vector FAISS layout (Jégou et
-    al. TPAMI'11 §V; the flat pq_topk is its n_cells=1 special case).
-    Composition of the existing pieces: ivf_assign owns each vector in
-    one cell and fans queries out to nprobe cells; ivf_pq_candidates
-    joins compressed codes to probed queries on cell_id; the broadcast
-    per-query LUTs score only those candidates; optional exact rerank
-    of the topk*oversample shortlist (rerank_with). Once nprobe covers
-    the cells holding the true neighbors, recall matches flat PQ at
-    the same oversample with a fraction of the scanned codes (measured
-    on the clustered fixture: equal recall at 47% of the scan,
-    nprobe=3 of 8 cells); pruning also keeps unprobed-cell ADC-noise
-    distractors out of the shortlist.
-
-    residual=True is the PRODUCTION encoding (Jégou §V): each vector's
-    codes quantize r = x - centroid(cell(x)) instead of x, so the same
-    m-byte budget spends its precision on the (much smaller) residual
-    — where IVF-PQ's recall at small m comes from. The approximate
-    score decomposes as <q, centroid_cell> + <q, r̂>: the first term is
-    a tiny (n_queries × n_cells) bias matrix (broadcast, cell_id rides
-    the candidate rows), the second the usual shared-codebook LUT
-    gathers. Pass codebooks trained on residuals
-    (ivf_pq_residual_codebooks); codes= is ignored under residual=True
-    (the encoding is centroid-relative).
-
-    Queries must be broadcastable (same guarded contract as pq_topk);
-    pass codes= to reuse a precomputed pq_encode table."""
-    spark = vectors.sparkSession
-    idt = _id_type(vectors, id_col)
-    if centroids is None:
-        if n_cells is None:
-            n_cells = max(1, round(vectors.count() / target_cell_rows))
-        centroids = ivf_centroids(vectors, n_cells, id_col, vec_col)
-    owned = ivf_assign(vectors, None, id_col, vec_col, centroids=centroids)
-    if residual:
-        res = _residual_vectors(owned, centroids, id_col, vec_col)
-        codes = pq_encode(res.select(id_col, vec_col), codebooks, id_col, vec_col)
-    elif codes is None:
-        codes = pq_encode(vectors, codebooks, id_col, vec_col)
-    luts = _pq_query_luts(queries, codebooks, id_col, vec_col)
-    if luts is None:
-        out_schema = (
-            f"query_id {idt}, neighbor_id {idt}, "
-            + ("cosine double" if rerank_with is not None else "approx_dot double")
-            + ", rank int"
-        )
-        return spark.createDataFrame([], out_schema)
-    qids, lut, qmat = luts
-    probes = ivf_assign(
-        queries, None, id_col, vec_col, centroids=centroids, nprobe=nprobe
-    )
-    cand = ivf_pq_candidates(codes, owned, probes, id_col, keep_cell=residual)
-    m = len(codebooks)
-    qindex = {qid: i for i, qid in enumerate(qids)}
-    if residual:
-        # <q, centroid_c> bias: centroids are broadcastable by contract
-        # (ivf_assign broadcast-joins them already) — tiny driver matrix
-        cent_rows = centroids.collect()
-        cell_index = {r["cell_id"]: i for i, r in enumerate(cent_rows)}
-        cent_mat = np.array([r["cv"] for r in cent_rows], dtype=np.float64)
-        bias = qmat @ cent_mat.T  # (nq, n_cells)
-        bc = spark.sparkContext.broadcast(
-            (qindex, lut.tolist(), cell_index, bias.tolist())
-        )
-    else:
-        bc = spark.sparkContext.broadcast((qindex, lut.tolist(), None, None))
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qindex_, lut_, cell_index_, bias_ = bc.value
-        lut_ = np.asarray(lut_)  # (nq, m, k)
-        if bias_ is not None:
-            bias_ = np.asarray(bias_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cmat = np.stack(pdf["codes"].to_numpy())  # (n, m)
-            qidx = pdf["query_id"].map(qindex_).to_numpy(dtype=np.int64)
-            scores = np.zeros(len(pdf), dtype=np.float64)
-            if bias_ is not None:
-                cidx = pdf["cell_id"].map(cell_index_).to_numpy(dtype=np.int64)
-                scores += bias_[qidx, cidx]
-            for j in range(m):
-                # row r scores against ITS query's LUT: paired fancy
-                # indexing (qidx[r], j, codes[r, j]) — fully vectorized
-                scores += lut_[qidx, j, cmat[:, j]]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "approx_dot": np.round(scores, 6),
-                }
-            )
-
-    scored = cand.mapInPandas(
-        op, schema=f"query_id {idt}, neighbor_id {idt}, approx_dot double"
-    )
-    shortlist_k = topk * oversample if rerank_with is not None else topk
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_dot"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= shortlist_k)
-    )
-    if rerank_with is None:
-        return shortlist
-    return _exact_rerank(shortlist, queries, rerank_with, topk, id_col, vec_col)

@@ -1177,7 +1177,9 @@ def process_one_batch(
     the PREVIOUS batch's recorded size (batches are similarly sized;
     reading the ledger costs one file open, zero Spark actions). Batch
     0, or a state with no ledger, runs unscoped. Explicit N overrides;
-    0 disables scoping entirely."""
+    0 disables scoping entirely. Behavior change: None used to mean
+    "leave the session setting alone" and now derives a per-batch
+    value, so callers that relied on the old no-op must pass 0."""
     scoped = cfg.batch_shuffle_partitions
     key = "spark.sql.shuffle.partitions"
     try:

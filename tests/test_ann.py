@@ -154,217 +154,14 @@ def test_rotated_planes_beat_axis_on_correlated_dims(correlated_vectors):
     exact.unpersist()
 
 
-@pytest.fixture(scope="module")
-def unit_vectors(spark):
-    """Unit-normalized clustered vectors (PQ approximates the inner
-    product, so cosine search feeds unit vectors)."""
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(CENTERS, DIM)) * 3.0
-    rows = []
-    for i in range(N):
-        v = centers[i % CENTERS] + rng.normal(size=DIM) * 0.4
-        v = v / np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v.astype(np.float32)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
-    df.count()
-    return df
-
-
-def test_pq_encode_shape_and_determinism(unit_vectors):
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        pq_codebooks,
-        pq_encode,
-    )
-
-    books = pq_codebooks(unit_vectors, m=8, k=16)
-    assert len(books) == 8 and all(b.shape == (16, DIM // 8) for b in books)
-    codes = pq_encode(unit_vectors, books)
-    rows = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-    assert len(rows) == N
-    assert all(len(c) == 8 and all(0 <= x < 16 for x in c) for c in rows.values())
-    again = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(unit_vectors, books).collect()
-    }
-    assert again == rows  # deterministic at any parallelism
-
-
-def test_pq_adc_and_rerank_recall(unit_vectors):
-    """PQ behavior profile on clustered data: ADC alone identifies the
-    right CLUSTER for every retrieved neighbor (coarse codes cannot
-    order near-ties within a tight cluster — that is what the exact
-    rerank is for); ADC shortlist + exact rerank recovers the true
-    top-k (first honest run: same-cluster 1.0, rerank recall 0.92)."""
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    books = pq_codebooks(unit_vectors, m=8, k=16)
-    codes = pq_encode(unit_vectors, books).cache()
-    codes.count()
-    queries = unit_vectors.limit(20)
-    exact = brute_force_topk(unit_vectors, queries, k=K).cache()
-    exact.count()
-    adc = pq_topk(codes, queries, books, topk=K).collect()
-    same_cluster = sum(
-        1 for r in adc if r["neighbor_id"] % CENTERS == r["query_id"] % CENTERS
-    )
-    assert same_cluster == len(adc)
-    rr = pq_topk(
-        codes, queries, books, topk=K, rerank_with=unit_vectors, oversample=8
-    )
-    recall = rr.join(exact, ["query_id", "neighbor_id"], "inner").count() / exact.count()
-    assert recall >= 0.85
-    exact.unpersist()
-    codes.unpersist()
-
-
-def test_ivf_pq_cell_pruned_scan_and_recall(unit_vectors):
-    """IVF-PQ composition (the FAISS billion-vector layout): the ADC
-    scan must touch strictly fewer candidate codes than flat PQ
-    (cell-pruned inverted lists), and once nprobe covers the true
-    neighbors' cells (3 of 8 here — nprobe=2 measured 0.88 vs flat
-    0.91: cosine neighbors cross cell boundaries) the reranked recall
-    must be at least flat PQ's at the same oversample, with under half
-    the scanned codes."""
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        ivf_assign,
-        ivf_centroids,
-        ivf_pq_candidates,
-        ivf_pq_topk,
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    NQ = 20
-    books = pq_codebooks(unit_vectors, m=8, k=16)
-    codes = pq_encode(unit_vectors, books).cache()
-    codes.count()
-    cents = ivf_centroids(unit_vectors, CENTERS)
-    queries = unit_vectors.limit(NQ)
-
-    owned = ivf_assign(unit_vectors, centroids=cents)
-    probes = ivf_assign(queries, centroids=cents, nprobe=3)
-    n_scanned = ivf_pq_candidates(codes, owned, probes).count()
-    # flat ADC scans every code for every query; the inverted lists
-    # must cut that by at least half at nprobe=3/8
-    assert 0 < n_scanned < 0.5 * NQ * (N - 1)
-
-    exact = brute_force_topk(unit_vectors, queries, k=K).cache()
-    exact.count()
-    ivfpq = ivf_pq_topk(
-        unit_vectors, queries, books, topk=K, centroids=cents, nprobe=3,
-        codes=codes, rerank_with=unit_vectors, oversample=8,
-    )
-    flat = pq_topk(
-        codes, queries, books, topk=K, rerank_with=unit_vectors, oversample=8
-    )
-    r_ivfpq = _recall(ivfpq, exact)
-    r_flat = _recall(flat, exact)
-    assert r_ivfpq >= r_flat
-    assert r_ivfpq >= 0.85
-    exact.unpersist()
-    codes.unpersist()
-
-
-def test_pq_self_row_does_not_consume_shortlist_slot(unit_vectors):
-    """A corpus query's own row always ranks first in ADC (dot with
-    itself) and is filtered out — it must not consume a shortlist
-    slot: with the codes in ONE partition and no rerank, each query
-    must still get exactly topk neighbors, not topk-1."""
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    books = pq_codebooks(unit_vectors, m=4, k=16)
-    codes = pq_encode(unit_vectors, books).coalesce(1)
-    queries = unit_vectors.limit(5)
-    per_query = (
-        pq_topk(codes, queries, books, topk=K)
-        .groupBy("query_id")
-        .count()
-        .collect()
-    )
-    assert len(per_query) == 5
-    assert all(r["count"] == K for r in per_query)
-
-
-def test_pq_query_collect_guard(spark, unit_vectors, monkeypatch):
-    """The driver-side LUT build must fail fast on an oversized query
-    table (row guard) instead of OOMing the driver."""
-    import energy_aware_entity_resolution_spark.operators.similarity_search as ss
-
-    books = ss.pq_codebooks(unit_vectors, m=4, k=4)
-    codes = ss.pq_encode(unit_vectors, books)
-    monkeypatch.setattr(ss, "_PQ_QUERY_MAX_ROWS", 10)
-    with pytest.raises(ValueError, match="queries table exceeds"):
-        ss.pq_topk(codes, unit_vectors, books, topk=3)
-    monkeypatch.setattr(ss, "_PQ_QUERY_MAX_ROWS", 100_000)
-    monkeypatch.setattr(ss, "_PQ_QUERY_MAX_BYTES", 64)
-    with pytest.raises(ValueError, match="vector bytes"):
-        ss.pq_topk(codes, unit_vectors, books, topk=3)
-
-
-def test_ivf_pq_degenerate_inputs(spark, unit_vectors):
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        ivf_pq_topk,
-        pq_codebooks,
-    )
-
-    books = pq_codebooks(unit_vectors, m=4, k=4)
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = ivf_pq_topk(unit_vectors, empty, books, topk=3, n_cells=4)
-    assert out.count() == 0
-    assert out.columns == ["query_id", "neighbor_id", "approx_dot", "rank"]
-    out_rr = ivf_pq_topk(
-        unit_vectors, empty, books, topk=3, n_cells=4,
-        rerank_with=unit_vectors,
-    )
-    assert out_rr.count() == 0
-    assert out_rr.columns == ["query_id", "neighbor_id", "cosine", "rank"]
-
-
-def test_pq_degenerate_inputs(spark, unit_vectors):
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError):
-        pq_codebooks(empty, m=4, k=4)
-    books = pq_codebooks(unit_vectors, m=4, k=4)
-    codes = pq_encode(unit_vectors, books)
-    assert pq_topk(codes, empty, books, topk=3).count() == 0
-    assert (
-        pq_topk(codes, empty, books, topk=3, rerank_with=unit_vectors).count()
-        == 0
-    )
-
-
-def test_ann_string_ids_end_to_end(spark, unit_vectors):
-    """The ANN family must carry the INPUT's id type through its Arrow
-    schemas: the engine's natural key is conv_id STRING, so pipeline
-    embeddings flow through PQ / IVF-PQ / block_topk without a
-    caller-side remap. Same vectors under string ids must produce the
-    SAME neighbor structure as the long-id run (ids mapped 1:1)."""
-    from pyspark.sql import functions as F
-
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        block_topk_applyinpandas,
-        ivf_pq_topk,
-        pq_codebooks,
-        pq_encode,
-        pq_topk,
-    )
-
-    sv = unit_vectors.select(
+def test_ann_string_ids_end_to_end(clustered_vectors):
+    """The ANN family must carry the INPUT's id type: the engine's
+    natural key is conv_id STRING (the pipeline's embeddings flow into
+    ivf_topk with it), so the same vectors under string ids must give
+    string-typed output and the SAME neighbor structure as the long-id
+    run, ids mapped 1:1. Zero-padded ids keep the neighbor_id tie-break
+    order of the long run."""
+    sv = clustered_vectors.select(
         F.format_string("c%06d", F.col("vec_id")).alias("conv_id"),
         F.col("embedding"),
     ).cache()
@@ -373,128 +170,37 @@ def test_ann_string_ids_end_to_end(spark, unit_vectors):
     def as_str(i):
         return f"c{i:06d}"
 
-    books = pq_codebooks(unit_vectors, m=8, k=16, train_rows=256, iters=5)
-    sbooks = pq_codebooks(
-        sv, m=8, k=16, id_col="conv_id", train_rows=256, iters=5
-    )
-    # codebooks train on a hash-ordered id sample — the id REPRESENTATION
-    # changes the sample order, so compare structures per-variant, not
-    # cross-variant codes. Long-id run:
-    codes_l = pq_encode(unit_vectors, books)
-    out_l = pq_topk(codes_l, unit_vectors.limit(5), books, topk=3,
-                    rerank_with=unit_vectors)
-    want = {
-        (as_str(r["query_id"]), as_str(r["neighbor_id"]), r["rank"])
-        for r in out_l.collect()
+    # ivf centroids are a hash-ordered id sample, so the id
+    # representation would change them; one shared table isolates typing
+    cents = ivf_centroids(clustered_vectors, 8).cache()
+    runs = {
+        "brute_force_topk": (
+            brute_force_topk(
+                clustered_vectors, clustered_vectors.where("vec_id < 20"), k=3
+            ),
+            brute_force_topk(
+                sv, sv.where(F.col("conv_id") < as_str(20)), k=3, id_col="conv_id"
+            ),
+        ),
+        "ivf_topk": (
+            ivf_topk(clustered_vectors, k=3, centroids=cents, nprobe=2),
+            ivf_topk(sv, k=3, id_col="conv_id", centroids=cents, nprobe=2),
+        ),
+        "bucketed_topk": (
+            bucketed_topk(clustered_vectors, k=3, n_bits=4, probe_hamming=1),
+            bucketed_topk(sv, k=3, n_bits=4, probe_hamming=1, id_col="conv_id"),
+        ),
     }
-    assert len(want) == 15
-
-    # string-id run end-to-end with the SAME codebooks (books trained
-    # on identical vectors -> identical float arrays is not guaranteed
-    # across samples; reuse books so the comparison isolates id typing)
-    codes_s = pq_encode(sv, books, id_col="conv_id")
-    assert dict(codes_s.dtypes)["conv_id"] == "string"
-    out_s = pq_topk(codes_s, sv.limit(5), books, topk=3, id_col="conv_id",
-                    rerank_with=sv)
-    assert dict(out_s.dtypes)["neighbor_id"] == "string"
-    got = {
-        (r["query_id"], r["neighbor_id"], r["rank"]) for r in out_s.collect()
-    }
-    assert got == want
-
-    ivf_s = ivf_pq_topk(
-        sv, sv.limit(5), books, topk=3, n_cells=8, nprobe=3,
-        id_col="conv_id", rerank_with=sv,
-    )
-    assert dict(ivf_s.dtypes)["query_id"] == "string"
-    rows = ivf_s.collect()
-    assert len(rows) == 15 and all(r["neighbor_id"].startswith("c") for r in rows)
-
-    blocked = sv.withColumn(
-        "blk", (F.xxhash64("conv_id") % 2 == 0).cast("int")
-    )
-    bt = block_topk_applyinpandas(blocked, "blk", k=2, id_col="conv_id")
-    assert dict(bt.dtypes)["query_id"] == "string"
-    assert bt.count() > 0
-    # per-query ranks are 1..k and neighbors stay inside the block
-    one = bt.where(F.col("query_id") == as_str(0)).collect()
-    assert sorted(r["rank"] for r in one) == list(range(1, len(one) + 1))
-    assert sbooks is not None  # string-id codebook training also runs
-
-
-def test_ivf_pq_residual_encoding_beats_raw(spark, unit_vectors):
-    """Residual IVF-PQ (Jégou TPAMI'11 §V: codes quantize
-    x - centroid(x), scored as <q, centroid_cell> + shared-codebook
-    LUT gathers): at the SAME m, codebook size, centroids and scan
-    budget (nprobe), the residual encoding must (a) approximate the
-    true inner product strictly better — residual energy ≪ vector
-    energy on clustered data, so the byte budget quantizes finer
-    (measured here: mean |ADC - true| ~0.018 vs ~0.028) — and (b)
-    reach at least the raw encoding's ADC-only recall at a depth where
-    ordering precision matters (top-5 on this tight fixture saturates
-    under rerank and both encodings tie; k=25 ADC-only separates
-    them, measured 0.618 vs 0.580)."""
-    from energy_aware_entity_resolution_spark.operators.similarity_search import (
-        ivf_pq_residual_codebooks,
-        ivf_pq_topk,
-        pq_codebooks,
-    )
-
-    queries = unit_vectors.limit(20).cache()
-    cents = ivf_centroids(unit_vectors, 8).cache()
-    cents.count()
-    raw_books = pq_codebooks(unit_vectors, m=8, k=16)
-    res_books = ivf_pq_residual_codebooks(unit_vectors, cents, m=8, k=16)
-    vecs = {
-        r["vec_id"]: np.array(r["embedding"], dtype=float)
-        for r in unit_vectors.collect()
-    }
-
-    def adc_err(out):
-        errs = [
-            abs(
-                r["approx_dot"]
-                - float(vecs[r["query_id"]] @ vecs[r["neighbor_id"]])
-            )
-            for r in out.collect()
-        ]
-        return sum(errs) / len(errs)
-
-    # (a) full-scan ADC accuracy at identical budget
-    raw_full = ivf_pq_topk(
-        unit_vectors, queries, raw_books, topk=N, centroids=cents, nprobe=8
-    )
-    res_full = ivf_pq_topk(
-        unit_vectors, queries, res_books, topk=N, centroids=cents, nprobe=8,
-        residual=True,
-    )
-    e_raw, e_res = adc_err(raw_full), adc_err(res_full)
-    print(f"ADC err raw={e_raw:.4f} residual={e_res:.4f}")
-    assert e_res < e_raw
-
-    # (b) ADC-only recall at the same scan budget
-    exact = brute_force_topk(unit_vectors, queries, k=25).cache()
-    n_ex = exact.count()
-    raw = ivf_pq_topk(
-        unit_vectors, queries, raw_books, topk=25, centroids=cents, nprobe=3
-    )
-    resid = ivf_pq_topk(
-        unit_vectors, queries, res_books, topk=25, centroids=cents, nprobe=3,
-        residual=True,
-    )
-    r_raw = raw.join(exact, ["query_id", "neighbor_id"], "inner").count() / n_ex
-    r_res = (
-        resid.join(exact, ["query_id", "neighbor_id"], "inner").count() / n_ex
-    )
-    print(f"recall@25 raw={r_raw:.3f} residual={r_res:.3f}")
-    assert r_res >= r_raw
-    assert r_res >= 0.6
-    # determinism: same call, same result
-    again = ivf_pq_topk(
-        unit_vectors, queries, res_books, topk=25, centroids=cents, nprobe=3,
-        residual=True,
-    )
-    assert sorted(map(tuple, resid.collect())) == sorted(
-        map(tuple, again.collect())
-    )
-    exact.unpersist()
+    for name, (out_l, out_s) in runs.items():
+        dtypes = dict(out_s.dtypes)
+        assert dtypes["query_id"] == dtypes["neighbor_id"] == "string", name
+        want = {
+            (as_str(r["query_id"]), as_str(r["neighbor_id"]), r["rank"])
+            for r in out_l.collect()
+        }
+        got = {
+            (r["query_id"], r["neighbor_id"], r["rank"]) for r in out_s.collect()
+        }
+        assert want and got == want, name
+    cents.unpersist()
+    sv.unpersist()

@@ -21,7 +21,6 @@ from energy_aware_entity_resolution_spark.operators.dedup import (
     simhash_col,
 )
 from energy_aware_entity_resolution_spark.operators.similarity_search import (
-    block_topk_applyinpandas,
     brute_force_topk,
     bucketed_topk,
 )
@@ -204,17 +203,6 @@ def test_ivf_assignment_and_topk(spark, vectors):
     for r in out.collect():
         assert r["rank"] in (1, 2)
         assert rows[r["query_id"]] == rows[r["neighbor_id"]]  # same cell only
-
-
-def test_block_topk_matches_brute_force_within_block(spark, vectors):
-    blocked = vectors.withColumn("blk", F.col("vec_id") % 4)
-    out = block_topk_applyinpandas(blocked, "blk", k=2)
-    rows = out.collect()
-    assert all(r["rank"] in (1, 2) for r in rows)
-    assert {r["query_id"] for r in rows} == set(range(40))
-    # within-block neighbors only
-    for r in rows:
-        assert r["query_id"] % 4 == r["neighbor_id"] % 4
 
 
 def test_near_dup_pairs_verified(spark, docs):

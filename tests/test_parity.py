@@ -2,24 +2,10 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from energy_aware_entity_resolution_spark.operators.parity import (
-    common_neighbor_validation,
     cross_source_filter,
     load_ground_truth_csv,
-    parse_idx_suffix_col,
-    train_word2vec_embeddings,
 )
-
-
-def test_parse_idx_suffix(spark):
-    df = spark.createDataFrame(
-        [("idx__123",), ("idx__77.0",), ("junk",)], "rid string"
-    )
-    got = [r["n"] for r in df.select(parse_idx_suffix_col(F.col("rid")).alias("n")).collect()]
-    assert got == [123, 77, None]
 
 
 def test_cross_source_filter(spark):
@@ -37,18 +23,6 @@ def test_cross_source_filter(spark):
     assert got == {("a1", "b1"), ("a2", "b1")}
 
 
-def test_common_neighbor_validation(spark):
-    edges = spark.createDataFrame(
-        [("x", "n1", 0.9), ("y", "n1", 0.8), ("z", "n2", 0.7)],
-        "src string, dst string, score double",
-    )
-    got = {
-        (r["conv_id_a"], r["conv_id_b"]): r["n_common"]
-        for r in common_neighbor_validation(edges).collect()
-    }
-    assert got == {("x", "y"): 1}
-
-
 def test_load_ground_truth_csv(spark, tmp_path):
     p = tmp_path / "gt.txt"
     p.write_text("idx_3,idx_7\nidx__2,idx__1\n")
@@ -57,23 +31,3 @@ def test_load_ground_truth_csv(spark, tmp_path):
         for r in load_ground_truth_csv(spark, str(p)).collect()
     }
     assert got == {("idx__3", "idx__7"), ("idx__1", "idx__2")}
-
-
-def test_word2vec_optin_produces_vectors(spark):
-    feats = spark.createDataFrame(
-        [("c1", ["alpha", "beta", "gamma"]), ("c2", ["alpha", "beta", "delta"])],
-        "conv_id string, rare_tokens array<string>",
-    )
-    out = train_word2vec_embeddings(feats, dim=8)
-    rows = out.collect()
-    assert len(rows) == 2
-    assert all(len(r["w2v_vec"]) == 8 for r in rows)
-
-
-def test_predict_pairs_is_stubbed(spark):
-    from energy_aware_entity_resolution_spark.operators.parity import (
-        predict_pairs_stub,
-    )
-
-    with pytest.raises(NotImplementedError):
-        predict_pairs_stub(None)

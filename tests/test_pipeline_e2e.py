@@ -60,24 +60,6 @@ def test_evaluation_grid_reproduces_hand_computed_cell(spark):
     assert row["f1"] == 0.5
 
 
-def test_pairwise_metrics_bis_restricts_to_truth_nodes(spark):
-    from energy_aware_entity_resolution_spark.operators.evaluation import (
-        pairwise_metrics_bis,
-    )
-
-    matches = spark.createDataFrame(
-        [("a", "b", 1.0, "direct"), ("x", "y", 1.0, "direct")],
-        "conv_id_a string, conv_id_b string, score double, decision string",
-    )
-    labeled = spark.createDataFrame(
-        [("a", "b", 1), ("a", "c", 0)], "conv_id_a string, conv_id_b string, label int"
-    )
-    truth = labeled.where("label = 1").select("conv_id_a", "conv_id_b")
-    m = pairwise_metrics_bis(matches, labeled, truth)
-    # (x, y) touches no truth node -> excluded entirely; (a, b) is a tp
-    assert m["tp"] == 1 and m["fp"] == 0 and m["fn"] == 0
-
-
 def test_stage_metrics_record_cpu_proxy(spark, transcripts):
     from energy_aware_entity_resolution_spark.config import PipelineConfig
 
