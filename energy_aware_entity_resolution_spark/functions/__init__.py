@@ -7,7 +7,6 @@ from energy_aware_entity_resolution_spark.functions.cleaning import (
 )
 from energy_aware_entity_resolution_spark.functions.keys import (
     bitmask_col,
-    qgrams_col,
     sig_hash_col,
     sorted_neighborhood_key_col,
 )
@@ -19,7 +18,6 @@ __all__ = [
     "signature_col",
     "tokens_col",
     "bitmask_col",
-    "qgrams_col",
     "sig_hash_col",
     "sorted_neighborhood_key_col",
 ]

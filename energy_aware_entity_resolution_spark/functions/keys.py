@@ -38,13 +38,6 @@ def sig_hash_col(sig: Column) -> Column:
     return F.xxhash64(sig)
 
 
-def qgrams_col(cleaned: Column, n: int = 3) -> Column:
-    """Character n-grams of the cleaned text (P10 analog at char level;
-    the reference's token n-grams are in minhash.shingles_col)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(cleaned) - (n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: cleaned.substr(i, F.lit(n)))
-
-
 def token_ngrams_col(tokens: Column, n: int = 2) -> Column:
     """Sliding token n-grams (reference _gen_ngrams,
     dynamic_graph.py:293-317; names them 'ng::<n>::a␟b' — we keep plain

@@ -53,14 +53,6 @@ def perm_hash_col(x31: Column, i: int) -> Column:
     return (F.lit(perm_coeff_a(i)) * x31 + F.lit(perm_coeff_b(i))) % F.lit(MERSENNE31)
 
 
-def perm_hash_sql(x31_expr: str, i_expr: str) -> str:
-    """Same formula with the permutation index as a SQL expression."""
-    i64 = f"(({i_expr})::BIGINT + 1)"
-    a = f"((((1103515245::BIGINT * {i64} + 12345) % 2147483648) | 1))"
-    b = f"((69069::BIGINT * {i64} + 1) % 2147483648)"
-    return f"(({a} * ({x31_expr})::BIGINT + {b}) % 2147483647)"
-
-
 def portable_minhash_col(tokens: Column, k: int) -> Column:
     """array<string> tokens -> array<long> portable k-MinHash, pure
     column expression (no UDF): token hash = md5-60bit mod 2^31,

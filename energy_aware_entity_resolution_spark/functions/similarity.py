@@ -57,29 +57,6 @@ def multiset_jaccard_col(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
 
 
-def levenshtein_ratio_col(a: Column, b: Column, cap: int = 512) -> Column:
-    """1 - dist/max(len) over length-capped strings (M2 analog).
-
-    The reference uses Levenshtein.ratio (formula_comparison.py:15-17,
-    C library); Spark's built-in `levenshtein` keeps this JVM-side.
-    Cap bounds the O(len²) DP on long assembled conversations
-    (SURVEY.md §7.3 risk note).
-    """
-    a_c = F.substring(a, 1, cap)
-    b_c = F.substring(b, 1, cap)
-    mx = F.greatest(F.length(a_c), F.length(b_c), F.lit(1))
-    return F.lit(1.0) - F.levenshtein(a_c, b_c) / mx
-
-
-def multiset_equal_col(a: Column, b: Column) -> Column:
-    """Deterministic equality ignoring ''/nan (M5/M6,
-    formula_comparison.py:8-13)."""
-    clean = lambda c: F.array_sort(  # noqa: E731
-        F.filter(c, lambda x: (x != F.lit("")) & (x != F.lit("nan")))
-    )
-    return clean(a) == clean(b)
-
-
 def _jaro_winkler(s1: str, s2: str) -> float:
     """Plain-Python Jaro-Winkler (public textbook formula)."""
     if s1 == s2:

@@ -24,12 +24,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "los", "que", "una", "por", "para"],
 }
 
-STOPWORDS_EN = [
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "for", "on", "with", "as", "at", "by", "this", "that",
-]
-
-
 def ws_tokens_col(text: Column) -> Column:
     """Whitespace tokenization (keeps duplicates — counting semantics)."""
     return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != F.lit(""))
@@ -50,13 +44,6 @@ def distinct_token_ratio_col(text: Column) -> Column:
     return F.when(
         F.size(toks) > 0, F.size(F.array_distinct(toks)) / F.size(toks)
     ).otherwise(F.lit(0.0))
-
-
-def stopword_ratio_col(text: Column, stopwords: list[str] | None = None) -> Column:
-    toks = ws_tokens_col(F.lower(text))
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def mean_word_len_col(text: Column) -> Column:

@@ -3,8 +3,8 @@ A6, FIXTURES.md §4; reference match_gouvernance/match_state.py:5-63 and
 Prometheus counters dataprocessing/metrics.py:3-21).
 
 The reference versions every pair decision in an in-memory dict; here
-it is an append-only table with `version` assigned by a window over
-(pair, ts). Lineage rows are per-partition row counts + driver-side
+it is an append-only table, one row per decision with its ts and
+run_id. Lineage rows are per-partition row counts + driver-side
 wall time per stage — written to the audit store (parquet dir standing
 in for the Iceberg audit table; sources/catalog.py abstracts that).
 """
@@ -17,13 +17,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def match_state(decided: DataFrame, stage: str, run_id: str) -> DataFrame:
     """Scored/decided pairs -> match-state rows (README.md:40-48 schema:
-    pair_key, ts, version, score, stage PM/CM, decision, transaction,
-    active)."""
+    pair_key, ts, score, stage PM/CM, decision, transaction, active;
+    the reference's per-pair ``version`` is not materialized — order
+    a pair's rows by ts instead)."""
     return decided.select(
         F.struct(
             F.col("conv_id_a").alias("a"), F.col("conv_id_b").alias("b")
@@ -36,12 +36,6 @@ def match_state(decided: DataFrame, stage: str, run_id: str) -> DataFrame:
         F.lit(True).alias("active"),
         F.lit(run_id).alias("run_id"),
     )
-
-
-def with_versions(audit: DataFrame) -> DataFrame:
-    """Assign version 1..n per pair by ts (match_state.py:23-40)."""
-    w = Window.partitionBy("pair_key").orderBy("ts", "stage")
-    return audit.withColumn("version", F.row_number().over(w))
 
 
 def partition_lineage(df: DataFrame, stage: str, run_id: str) -> DataFrame:

@@ -176,17 +176,3 @@ def cap_blocks(
     sizes = blocks.groupBy(*key_cols).count()
     keep = sizes.where(F.col("count") <= max_size).drop("count")
     return blocks.join(keep, on=key_cols, how="left_semi")
-
-
-def block_stats(blocks: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Block-size distribution for skew diagnostics (audit table feed)."""
-    return (
-        blocks.groupBy(*key_cols)
-        .count()
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.max("count").alias("max_block"),
-            F.expr("percentile_approx(count, 0.99)").alias("p99_block"),
-            F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("pair_budget"),
-        )
-    )

@@ -33,17 +33,6 @@ def _directed(scored: DataFrame) -> DataFrame:
     )
 
 
-def top_n_neighbors(scored: DataFrame, n: int) -> DataFrame:
-    """D6: per record keep n best neighbors (window top-k replaces the
-    reference's min-heap)."""
-    w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
-    return (
-        _directed(scored)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= n)
-    )
-
-
 def ratio_test(directed_ranked: DataFrame, ratio: float, delta: float = 0.0) -> DataFrame:
     """D1: keep a record's best edge only if s1/s2 >= ratio (and
     s1-s2 >= delta); lead() supplies s2 (the reference reads the

@@ -8,41 +8,44 @@ index incrementally and re-emits per-round similarity snapshots.
 Structured Streaming has no count-based windows, so (SURVEY.md §7.3)
 this module keeps the semantics as a deterministic chunked batch loop
 over the same stage functions. State is APPEND-ONLY — per-batch cost is
-proportional to the BATCH, never to the accumulated state:
+proportional to the BATCH, never to the accumulated state.
 
-- ``features/batch=N``   new conversations' features (delta, written
-  once; per-batch row counts in ``feat_counts/N``). Every
-  _CLUSTER_COMPACT_EVERY-th batch folds the tree into
-  ``features_compact/batch=N`` so accumulated reads touch one snapshot
-  + ≤K delta dirs instead of every batch dir ever written — at
-  micro-batch cadence the growing tree's file-open overhead was the
-  measured residual linear term (BASELINE.md round-5 curve)
-- ``scored_rounds/round=N``  per-round scored-pair snapshot (W5);
-  global mode also records each round's row count
-  (``round_counts/N``) so the adaptive decide gate sums a file ledger
-  instead of count-scanning the accumulated tree every batch, and
-  folds the tree into ``scored_compact/round=N`` at the compaction
-  cadence (the global re-decision reads the whole accumulated scored
-  state every batch — the fold keeps that read's file count bounded;
-  per-round deltas stay for W5/timeseries readers)
-- ``matches/batch=N``    match DELTAS (new×new ∪ new×state pairs only —
+Every tree below is a ``streaming.state.StateTree`` of per-batch
+deltas ``<tree>/<part>=N``. The first four also fold: every
+``state.FOLD_EVERY``-th batch writes ``<tree>_compact/<part>=N``,
+committed by ``_SUCCESS``, so a read opens one fold and at most ~K
+delta dirs. They differ only in the view their fold holds:
+
+- ``features/batch=N``  new conversations' features; view: union.
+- ``scored_rounds/round=N``  per-round scored pairs (W5); view: union.
+  Folded in global mode only — the global re-decision reads the whole
+  accumulated scored state every batch; the per-round deltas stay for
+  W5/timeseries readers.
+- ``matches/batch=N``  match DELTAS (new×new ∪ new×state pairs only —
   old×old pairs were decided in earlier rounds and never re-explored,
-  so a pair appears in exactly one batch)
-- ``remaps/batch=N``     incremental-CC merge records (old_root →
-  new_root), the C4 component state. Each batch maps its new match
-  edges onto current component roots, runs connected components on the
-  REDUCED component graph (bounded by the batch's match count), and
-  appends only the roots that changed. Cluster reads resolve the remap
-  chain: a row/byte-guarded driver fast path (same guards as the CC
-  fast path) for small chains, else distributed pointer-jumping
-  self-joins — the chain NEVER collects to the driver above the guard,
-  so a dup-heavy 100 TB corpus cannot OOM it.
+  so a pair appears in exactly one batch); view: adds minus the
+  ``revoked/batch=N`` deltas after the fold (global mode, below).
+- ``clusters/batch=N``  global-mode cluster assignments; view:
+  latest-wins per conv_id (below).
+- ``revoked/batch=N``  global-mode revokes; read through the
+  matches view, never folded.
+- ``remaps/batch=N``  incremental-CC merge records (old_root →
+  new_root), the C4 component state of threshold mode. Each batch maps
+  its new match edges onto current component roots, runs connected
+  components on the REDUCED component graph (bounded by the batch's
+  match count), and appends only the roots that changed. Cluster reads
+  resolve the remap chain: a row/byte-guarded driver fast path (same
+  guards as the CC fast path) for small chains, else distributed
+  pointer-jumping self-joins — the chain NEVER collects to the driver
+  above the guard, so a dup-heavy 100 TB corpus cannot OOM it.
 
-A terminal ``done/_DONE_N`` marker commits each batch; a killed run
-resumes from the last complete batch, every per-batch write targets a
-deterministic partition path with overwrite, so replays are idempotent
-and converge to the same final clusters as a single-shot batch run
-(tested in tests/test_incremental.py).
+Batch N commits with one empty marker ``done/_DONE_{N:04d}_{md5}``,
+written last (``state.commit``); a killed run resumes from the last
+committed batch. Every per-batch write targets a deterministic
+partition path with overwrite, so replays are idempotent and converge
+to the same final clusters as a single-shot batch run (tested in
+tests/test_incremental.py). A state dir in an older layout raises
+``ValueError`` (``state.check_layout``).
 
 Decision semantics by config (W4):
 
@@ -94,13 +97,8 @@ Decision semantics by config (W4):
   components keep their exact member set and internal edges, so their
   min-member component_id is unchanged and the merged view equals a
   full CC recompute (tested against the single-shot batch run).
-  Every _CLUSTER_COMPACT_EVERY-th batch COMPACTS the ledger (folds
-  the full current assignment into its partition + marker), so
-  latest-wins reads prune to [last compaction, now] instead of
-  scanning every delta ever written — amortized O(N/K) extra rows per
-  batch, and a thousands-of-micro-batches stream keeps O(K deltas +
-  one snapshot) read cost (pruning proven by a delete-the-old-
-  partitions test).
+  The ledger folds like every other tree; fold rows order as the
+  fold batch, so latest-wins over fold ∪ later deltas stays exact.
 """
 
 from __future__ import annotations
@@ -128,67 +126,17 @@ from energy_aware_entity_resolution_spark.operators.clustering import (
 from energy_aware_entity_resolution_spark.operators.decision import decide_matches
 from energy_aware_entity_resolution_spark.operators.scoring import score_pairs
 from energy_aware_entity_resolution_spark.plans.pipeline import _release_upstream
+from energy_aware_entity_resolution_spark.streaming.state import (
+    StateTree,
+    check_layout,
+    commit,
+    last_complete_batch,
+)
 
 _FEATURE_COLS = [
     "conv_id", "sig", "sig_hash", "bitmask", "rare_tokens", "rare_sig",
     "sn_key", "minhash", "vec", "tokens", "cleaned", "doc", "n_turns",
 ]
-
-
-def _done(state_dir: str, b: int) -> str:
-    return os.path.join(state_dir, "done", f"_DONE_{b:04d}")
-
-
-def _content_done(state_dir: str, marker: str) -> str:
-    """Content-NAMED twin of a done marker: the replay guard resolves
-    ``md5(marker)`` to a filename, so the positive lookup is one
-    os.path.exists instead of opening every ``_DONE_N`` file
-    (O(batches²) over a stream's life at micro-batch cadence —
-    VERDICT r05 #3/#5)."""
-    import hashlib
-
-    return os.path.join(
-        state_dir,
-        "done",
-        "_DONE_C_" + hashlib.md5(marker.encode()).hexdigest(),
-    )
-
-
-def _parquet_rows(path: str) -> int | None:
-    """Exact row count of a just-written parquet dir from its footers —
-    a driver-side metadata read, not a Spark job. The micro-batch floor
-    is ~20 jobs/batch of fixed scheduling cost (BASELINE.md); counting
-    freshly written batch deltas this way removes one job per count.
-    None when the dir is unreadable (caller falls back to .count())."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
-        return None
-    total = 0
-    try:
-        names = os.listdir(path)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return None  # uncommitted write: don't trust the footers
-        for name in names:
-            if name.endswith(".parquet"):
-                total += pq.ParquetFile(
-                    os.path.join(path, name)
-                ).metadata.num_rows
-    except OSError:
-        return None
-    return total
-
-
-def last_complete_batch(state_dir: str) -> int:
-    best = -1
-    done_dir = os.path.join(state_dir, "done")
-    if os.path.isdir(done_dir):
-        for name in os.listdir(done_dir):
-            # skip content-named twins (_DONE_C_<md5>) and flags —
-            # only numeric batch markers carry the batch id
-            if name.startswith("_DONE_") and not name.startswith("_DONE_C_"):
-                best = max(best, int(name.rsplit("_", 1)[1]))
-    return best
 
 
 def _incremental_candidates(
@@ -417,9 +365,7 @@ def _merge_step(
         F.col("conv_id").alias("old_root"),
         F.col("component_id").alias("new_root"),
     )
-    new_remaps.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "remaps", f"batch={b}")
-    )
+    StateTree(state_dir, "remaps", "batch").write(b, new_remaps)
 
 
 def resolve_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -427,34 +373,21 @@ def resolve_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     feature ids ⟕ path-compressed remap chain (broadcast only when the
     guarded driver path certified the chain small).
 
-    Global-decision state (a ``revoked`` dir exists) carries no remap
-    ledger — merge-only remaps can't express revocation — so clusters
-    read the per-batch ``clusters`` DELTA ledger instead (latest
-    assignment per conv_id; see _cluster_delta_step). Legacy global
-    state without that ledger falls back to a full CC recompute over
-    the current match set.
+    Global-decision state carries no remap ledger — merge-only remaps
+    can't express revocation — so clusters read the ``clusters`` tree
+    instead (latest assignment per conv_id; see _cluster_delta_step).
+    A state dir in an older layout raises ValueError.
 
-    Every read is bounded to COMMITTED batches (done marker written):
+    Every read is bounded to COMMITTED batches (commit marker written):
     a crashed or concurrently-running batch's partial files — features
     without matches, adds without revokes, remaps without the marker —
     are never visible."""
+    check_layout(state_dir)
     last = last_complete_batch(state_dir)
     all_ids = accumulated_features(spark, state_dir, last).select("conv_id")
-    rev_path = os.path.join(state_dir, "revoked")
-    if os.path.isdir(rev_path):
-        if os.path.isdir(os.path.join(state_dir, "clusters")):
-            assign = _cluster_assignments(spark, state_dir, last)
-            return all_ids.join(assign, "conv_id", "left").select(
-                "conv_id",
-                F.coalesce("component_id", F.col("conv_id")).alias(
-                    "component_id"
-                ),
-            )
-        edges = accumulated_matches(spark, state_dir, upto_batch=last).select(
-            F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-        )
-        comp = connected_components(edges)
-        return all_ids.join(comp, "conv_id", "left").select(
+    if os.path.isdir(os.path.join(state_dir, "clusters")):
+        assign = _cluster_assignments(spark, state_dir, last)
+        return all_ids.join(assign, "conv_id", "left").select(
             "conv_id",
             F.coalesce("component_id", F.col("conv_id")).alias("component_id"),
         )
@@ -529,112 +462,47 @@ def _pairs_incident(
     return a_hit.unionByName(b_only)
 
 
-# Cluster-ledger compaction cadence: every K-th global batch writes
-# the FULL current assignment (amortized O(N/K) extra rows per batch)
-# and drops a marker, so latest-wins reads prune to [last compaction,
-# now] — without it, a stream of thousands of micro-batches makes
-# every resolve/window read O(total deltas ever written).
-_CLUSTER_COMPACT_EVERY = 16
-
-
-def _last_compaction(state_dir: str, upto_batch: int) -> int:
-    """Highest committed compaction batch ≤ upto_batch, or -1. Markers
-    are written AFTER the compacted partition; a crash between them
-    leaves the partition as an ordinary (correct, superset) delta."""
-    best = -1
-    d = os.path.join(state_dir, "clusters_compact")
-    if os.path.isdir(d):
-        for name in os.listdir(d):
-            try:
-                b = int(name)
-            except ValueError:
-                continue
-            if b <= upto_batch:
-                best = max(best, b)
-    return best
-
-
-def _cluster_tree(
-    spark: SparkSession, state_dir: str, upto_batch: int
-) -> DataFrame:
-    """The cluster delta tree pruned to [last compaction, upto_batch]
-    — the only rows latest-wins needs once a compaction batch holds
-    the full assignment."""
-    since = _last_compaction(state_dir, upto_batch)
-    df = spark.read.parquet(os.path.join(state_dir, "clusters")).where(
-        F.col("batch") <= upto_batch
-    )
-    if since > 0:
-        df = df.where(F.col("batch") >= since)
-    return df
-
-
 def _cluster_assignments(
-    spark: SparkSession, state_dir: str, upto_batch: int
+    spark: SparkSession,
+    state_dir: str,
+    upto_batch: int,
+    max_fold: int | None = None,
 ) -> DataFrame:
     """Current (conv_id, component_id) view of the global-mode cluster
-    DELTA ledger: per conv_id, the latest batch's assignment wins,
-    read from the compaction-pruned tree. One columnar scan + one
-    window — never a CC recompute. (resolve-time read; the per-batch
-    step uses the id-restricted _latest_assignment instead so its
-    window shuffles only the touched region's history)."""
-    df = _cluster_tree(spark, state_dir, upto_batch)
-    w = Window.partitionBy("conv_id").orderBy(F.desc("batch"))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("conv_id", "component_id")
+    DELTA ledger — the clusters tree's latest-wins view: per conv_id,
+    the latest batch's assignment wins (fold rows order as the fold
+    batch). One columnar scan + one window — never a CC recompute.
+    (resolve-time read and fold view; the per-batch step uses the
+    id-restricted _latest_assignment instead so its window shuffles
+    only the touched region's history)."""
+    df, _ = StateTree(state_dir, "clusters", "batch").read(
+        spark, upto_batch, max_fold
     )
+    return _latest_assignment(df)
 
 
 def _latest_assignment(
-    tree: DataFrame, ids: DataFrame, small_ids: bool
+    tree: DataFrame, ids: DataFrame | None = None, small_ids: bool = False
 ) -> DataFrame:
-    """Latest-batch cluster assignment restricted to ``ids``: semi-join
-    FIRST (broadcast when the caller counted ids small — the ledger
-    tree is scanned map-side, not shuffled), then window only over the
-    restricted rows. Restricting by conv_id keeps the latest-wins
-    semantics exact: every historical row of a kept id survives the
-    semi-join, so the window still sees the id's full history."""
-    idc = ids.select("conv_id")
-    if small_ids:
-        idc = F.broadcast(idc)
-    sub = tree.join(idc, "conv_id", "left_semi")
+    """Latest-batch cluster assignment, restricted to ``ids`` when
+    given: semi-join FIRST (broadcast when the caller counted ids
+    small — the ledger tree is scanned map-side, not shuffled), then
+    window only over the restricted rows. Restricting by conv_id keeps
+    the latest-wins semantics exact: every historical row of a kept id
+    survives the semi-join, so the window still sees the id's full
+    history."""
+    sub = tree
+    if ids is not None:
+        idc = ids.select("conv_id")
+        if small_ids:
+            idc = F.broadcast(idc)
+        sub = tree.join(idc, "conv_id", "left_semi")
     w = Window.partitionBy("conv_id").orderBy(F.desc("batch"))
     return (
         sub.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select("conv_id", "component_id")
     )
-
-
-def _bootstrap_cluster_ledger(
-    spark: SparkSession, state_dir: str, upto: int, cfg: PipelineConfig
-) -> None:
-    """Backfill the cluster DELTA ledger for a LEGACY global-mode state
-    dir (written before the ledger existed): one full-CC compaction
-    batch — the complete current assignment as of batch ``upto`` plus
-    the compaction marker — after which delta maintenance proceeds
-    normally. Without this, resuming a pre-ledger state crashes on the
-    missing ``clusters`` path, and a partial backfill would treat
-    historically-clustered ids as singletons when computing touched
-    components. Ids not in the current match set stay out of the
-    ledger and resolve as singletons — exactly the legacy full-CC
-    fallback's semantics. Marker AFTER the partition write: a crash in
-    between leaves a full (correct, superset) delta and the next
-    resume redoes the bootstrap idempotently."""
-    prev = accumulated_matches(spark, state_dir, upto_batch=upto)
-    edges = prev.select(
-        F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
-    )
-    comp = connected_components(edges, max_iterations=cfg.cluster.max_iterations)
-    comp.select("conv_id", "component_id").write.mode("overwrite").parquet(
-        os.path.join(state_dir, "clusters", f"batch={upto}")
-    )
-    d = os.path.join(state_dir, "clusters_compact")
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, str(upto)), "w") as f:
-        f.write("ok")
 
 
 def _cluster_delta_step(
@@ -648,20 +516,15 @@ def _cluster_delta_step(
     edges' endpoints shared a prev component; added edges' endpoints
     are touched), so the recomputed region is edge-closed and untouched
     components keep their exact membership and min-member id."""
-    adds = spark.read.parquet(os.path.join(state_dir, "matches", f"batch={b}"))
-    revoked = spark.read.parquet(
-        os.path.join(state_dir, "revoked", f"batch={b}")
-    )
+    matches = StateTree(state_dir, "matches", "batch")
+    revoked = StateTree(state_dir, "revoked", "batch")
+    clusters = StateTree(state_dir, "clusters", "batch")
     touched = (
-        _endpoints(adds.select("conv_id_a", "conv_id_b"))
-        .unionByName(_endpoints(revoked.select("conv_id_a", "conv_id_b")))
+        _endpoints(spark.read.parquet(matches.path(b)))
+        .unionByName(_endpoints(spark.read.parquet(revoked.path(b))))
         .distinct()
         .localCheckpoint(eager=True)  # batch-sized; read by 3 branches
     )
-    if b > 0 and not os.path.isdir(os.path.join(state_dir, "clusters")):
-        # legacy (pre-ledger) global-mode state: backfill once, then
-        # maintain deltas as usual
-        _bootstrap_cluster_ledger(spark, state_dir, b - 1, cfg)
     if b > 0:
         # region = full current membership of the components touched
         # by this batch. Exactness matters: a SUPERSET that pulls in
@@ -675,18 +538,14 @@ def _cluster_delta_step(
         # Every window runs over id-restricted rows; the ledger tree
         # itself is only scanned (broadcast semis), never shuffled
         # whole.
-        tree = _cluster_tree(spark, state_dir, b - 1)
+        tree, _ = clusters.read(spark, b - 1)
         # |touched| <= 2*(adds + revokes); both dirs were just written,
         # so their parquet footers bound it without a count job
         # (VERDICT r05 #3: reuse ledger/metadata bounds to skip
         # provable-small checks). Exact count only when the bound
         # can't certify the broadcast.
-        n_adds = _parquet_rows(
-            os.path.join(state_dir, "matches", f"batch={b}")
-        )
-        n_rev = _parquet_rows(
-            os.path.join(state_dir, "revoked", f"batch={b}")
-        )
+        n_adds = matches.rows(b)
+        n_rev = revoked.rows(b)
         if n_adds is not None and n_rev is not None:
             n_touched = 2 * (n_adds + n_rev)
             if n_touched > _BROADCAST_NODES_MAX:
@@ -737,207 +596,83 @@ def _cluster_delta_step(
         "conv_id",
         F.coalesce("component_id", F.col("conv_id")).alias("component_id"),
     )
-    compact = bool(
-        b > 0 and _CLUSTER_COMPACT_EVERY and b % _CLUSTER_COMPACT_EVERY == 0
+    clusters.write(b, assign)
+    clusters.fold(
+        b, lambda upto, mf: _cluster_assignments(spark, state_dir, upto, mf)
     )
-    if compact:
-        # compaction batch: fold every still-current older assignment
-        # in (region rows win), so this partition alone carries the
-        # full state and readers prune to [here, now]
-        older = _cluster_assignments(spark, state_dir, b - 1).join(
-            region_ids, "conv_id", "left_anti"
-        )
-        assign = assign.unionByName(older)
-    assign.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "clusters", f"batch={b}")
-    )
-    if compact:
-        # marker AFTER the partition write: a crash in between leaves
-        # an ordinary (correct, superset) delta with no pruning claim
-        d = os.path.join(state_dir, "clusters_compact")
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, str(b)), "w") as f:
-            f.write("ok")
-
-
-def _last_snapshot(state_dir: str, subdir: str, upto_batch: int) -> int:
-    """Highest committed (``_SUCCESS`` present) snapshot batch ≤
-    upto_batch under ``state_dir/subdir``, or -1. Shared by the
-    matches/features/scored snapshot trees — one pruning rule, one
-    crash-visibility contract."""
-    best = -1
-    d = os.path.join(state_dir, subdir)
-    if os.path.isdir(d):
-        for name in os.listdir(d):
-            if "=" not in name:
-                continue
-            try:
-                b = int(name.split("=")[1])
-            except ValueError:
-                continue
-            if b <= upto_batch and os.path.exists(
-                os.path.join(d, name, "_SUCCESS")
-            ):
-                best = max(best, b)
-    return best
-
-
-def _last_match_compaction(state_dir: str, upto_batch: int) -> int:
-    """Highest committed match-set snapshot batch ≤ upto_batch, or -1."""
-    return _last_snapshot(state_dir, "matches_compact", upto_batch)
-
-
-def _snapshot_tree(
-    spark: SparkSession,
-    state_dir: str,
-    delta_dir: str,
-    snapshot_dir: str,
-    part_col: str,
-    upto: int,
-    max_snapshot: int | None = None,
-) -> DataFrame:
-    """Append-only tree read with snapshot pruning: latest committed
-    ``snapshot_dir`` fold ∪ later per-batch deltas from ``delta_dir``.
-
-    Without the fold, every accumulated read scans O(batches ever
-    written) directories — at micro-batch cadence (thousands of small
-    batches) the file-open/footer overhead of the growing tree was the
-    measured residual linear term in the per-batch wall (BASELINE.md,
-    round-5 80-batch curve). With it, a read touches one snapshot +
-    ≤ _CLUSTER_COMPACT_EVERY delta dirs: bounded files per batch.
-
-    max_snapshot has accumulated_matches' resume semantics: the
-    compaction writer rebuilding batch=b seeds from the PREVIOUS
-    snapshot so a crash between the snapshot's _SUCCESS and the batch
-    done marker can never make a resume read the path it is about to
-    overwrite."""
-    bound = upto if max_snapshot is None else min(max_snapshot, upto)
-    since = _last_snapshot(state_dir, snapshot_dir, bound)
-    df = (
-        spark.read.parquet(os.path.join(state_dir, delta_dir))
-        .where((F.col(part_col) > since) & (F.col(part_col) <= upto))
-        .drop(part_col)
-    )
-    if since >= 0:
-        df = df.unionByName(
-            spark.read.parquet(
-                os.path.join(state_dir, snapshot_dir, f"{part_col}={since}")
-            )
-        )
-    return df
 
 
 def accumulated_features(
     spark: SparkSession,
     state_dir: str,
     upto_batch: int,
-    max_snapshot: int | None = None,
+    max_fold: int | None = None,
 ) -> DataFrame:
-    """Feature state as of ``upto_batch`` (features_compact snapshot ∪
-    later batch deltas — see _snapshot_tree)."""
-    return _snapshot_tree(
-        spark, state_dir, "features", "features_compact", "batch",
-        upto_batch, max_snapshot,
+    """Feature state as of ``upto_batch``: the features tree's union
+    view (fold ∪ later batch deltas — StateTree.read)."""
+    df, _ = StateTree(state_dir, "features", "batch").read(
+        spark, upto_batch, max_fold
     )
+    return df.drop("batch")
 
 
 def _accumulated_scored(
     spark: SparkSession,
     state_dir: str,
     upto_round: int,
-    max_snapshot: int | None = None,
+    max_fold: int | None = None,
 ) -> DataFrame:
     """Accumulated scored-pair state as of ``upto_round`` (global-mode
-    re-decision input; scored_compact snapshot ∪ later round deltas).
-    Per-round ``scored_rounds/round=N`` snapshots are never deleted —
-    W5 readers and the round timeseries keep full history."""
-    return _snapshot_tree(
-        spark, state_dir, "scored_rounds", "scored_compact", "round",
-        upto_round, max_snapshot,
+    re-decision input; the scored tree's union view). Per-round
+    ``scored_rounds/round=N`` deltas are never deleted — W5 readers and
+    the round timeseries keep full history."""
+    df, _ = StateTree(state_dir, "scored_rounds", "round").read(
+        spark, upto_round, max_fold
     )
+    return df.drop("round")
 
 
-# Target rows per file for compaction snapshot writes: the fold is the
-# one place the engine controls the state tree's file granularity, so
-# size it for the scan instead of inheriting however many shuffle
-# partitions the union happened to have. Two bounds: files hold at most
-# _SNAPSHOT_ROWS_PER_FILE rows (tens of MB columnar — listing stays
-# cheap at billions of rows), AND a snapshot big enough to matter
-# spreads over >= min(parallelism, rows/_SNAPSHOT_MIN_ROWS_PER_FILE)
-# files — a single-file fold made every subsequent state scan a
-# one-task stage (measured +1.5-2 s/batch on the 80-batch curve).
-_SNAPSHOT_ROWS_PER_FILE = 1_000_000
-_SNAPSHOT_MIN_ROWS_PER_FILE = 4_096
-
-
-def _snapshot_coalesce(df: DataFrame, n_rows: int | None) -> DataFrame:
-    """Coalesce a snapshot fold to a file count sized from the count
-    ledger (None = legacy state without ledger records: write as-is)."""
-    if n_rows is None:
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    by_cap = -(-n_rows // _SNAPSHOT_ROWS_PER_FILE)
-    by_par = min(par, -(-n_rows // _SNAPSHOT_MIN_ROWS_PER_FILE))
-    return df.coalesce(max(1, by_cap, by_par))
+def _has_revokes(state_dir: str) -> bool:
+    """True once a global-mode batch wrote a ``revoked/batch=N`` delta."""
+    rev_path = os.path.join(state_dir, "revoked")
+    return os.path.isdir(rev_path) and any(
+        n.startswith("batch=") for n in os.listdir(rev_path)
+    )
 
 
 def accumulated_matches(
     spark: SparkSession,
     state_dir: str,
     upto_batch: int | None = None,
-    max_snapshot: int | None = None,
+    max_fold: int | None = None,
 ) -> DataFrame:
-    """Current match set: union of per-batch add deltas, minus revokes
+    """Current match set — the matches tree's view: adds minus revokes
     (global-decision mode only writes revokes; a pair is added at most
     once and revoked at most once, after its add — see module
-    docstring monotonicity argument).
-
-    When a ``matches_compact`` snapshot exists (written every
-    _CLUSTER_COMPACT_EVERY-th global batch alongside the cluster
-    compaction), the read is snapshot ∪ later adds, anti later
-    revokes — earlier deltas are already folded in, so the per-call
-    scan is O(snapshot + K batches of deltas), not O(every delta ever
-    written). The delta trees themselves are never deleted
+    docstring monotonicity argument). The fold already holds adds minus
+    revokes up to its batch, so only revokes after the fold apply. The
+    delta trees themselves are never deleted
     (round_evaluation_timeseries needs full history).
 
-    upto_batch=None reads COMMITTED state only (batches with a done
+    upto_batch=None reads COMMITTED state only (batches with a commit
     marker): a batch's adds land before its revokes, so an unbounded
     read during a crash window or a concurrent micro-batch would see
     pairs whose revocation hasn't been written yet — the same
     partial-state hazard the features reader prunes against.
-
-    max_snapshot bounds which SNAPSHOT may seed the read (deltas still
-    range over (snapshot, upto_batch]). The compaction writer needs it:
-    rebuilding the batch-b snapshot after a crash that committed
-    batch=b's _SUCCESS but not the done marker must NOT read the
-    batch=b snapshot it is about to overwrite (Spark refuses to
-    overwrite a path also being read — every resume attempt would then
-    fail), so it seeds from the previous compaction instead."""
+    max_fold is StateTree.read's: the fold writer seeds from the fold
+    before the one it overwrites."""
     if upto_batch is None:
         upto_batch = last_complete_batch(state_dir)
-    snap_bound = (
-        upto_batch if max_snapshot is None else min(max_snapshot, upto_batch)
+    m, since = StateTree(state_dir, "matches", "batch").read(
+        spark, upto_batch, max_fold
     )
-    since = _last_match_compaction(state_dir, snap_bound)
-    m = (
-        spark.read.parquet(os.path.join(state_dir, "matches"))
-        .where((F.col("batch") > since) & (F.col("batch") <= upto_batch))
-        .drop("batch")
-    )
-    if since >= 0:
-        snap = spark.read.parquet(
-            os.path.join(state_dir, "matches_compact", f"batch={since}")
-        )
-        m = m.unionByName(snap)
-    rev_path = os.path.join(state_dir, "revoked")
-    if os.path.isdir(rev_path) and any(
-        n.startswith("batch=") for n in os.listdir(rev_path)
-    ):
-        rev = spark.read.parquet(rev_path).where(
-            (F.col("batch") > since) & (F.col("batch") <= upto_batch)
+    m = m.drop("batch")
+    if _has_revokes(state_dir):
+        rev, _ = StateTree(state_dir, "revoked", "batch").read(
+            spark, upto_batch
         )
         m = m.join(
-            rev.select("conv_id_a", "conv_id_b"),
+            rev.where(F.col("batch") > since).select("conv_id_a", "conv_id_b"),
             ["conv_id_a", "conv_id_b"],
             "left_anti",
         )
@@ -971,12 +706,9 @@ def round_evaluation_timeseries(
         .where(F.col("batch") <= last)
         .select("conv_id_a", "conv_id_b", "batch")
     )
-    rev_path = os.path.join(state_dir, "revoked")
-    if os.path.isdir(rev_path) and any(
-        n.startswith("batch=") for n in os.listdir(rev_path)
-    ):
+    if _has_revokes(state_dir):
         rev = (
-            spark.read.parquet(rev_path)
+            spark.read.parquet(os.path.join(state_dir, "revoked"))
             .where(F.col("batch") <= last)
             .select(
                 "conv_id_a", "conv_id_b", F.col("batch").alias("rev_batch")
@@ -1031,117 +763,6 @@ def round_evaluation_timeseries(
     return out.orderBy("round")
 
 
-def _write_round_count(
-    state_dir: str, b: int, n: int, subdir: str = "round_counts"
-) -> None:
-    """Record this round's delta row count (scored pairs in
-    ``round_counts``, features in ``feat_counts``). The adaptive decide
-    gate needs n_accumulated every batch and the compaction folds need
-    a total to size their output files; summing the per-round ledger is
-    O(batches) file reads instead of an O(accumulated) columnar count
-    scan per batch — at thousands of micro-batches the count scan alone
-    was a growing per-batch tax. Idempotent overwrite (a resumed batch
-    rewrites the same value)."""
-    d = os.path.join(state_dir, subdir)
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, f"{b:04d}"), "w") as f:
-        f.write(str(n))
-
-
-# ledger subdir -> the delta tree whose parquet footers can backfill a
-# missing round record (pre-ledger resumed states — ADVICE r05)
-_LEDGER_DATA = {
-    "round_counts": ("scored_rounds", "round"),
-    "feat_counts": ("features", "batch"),
-}
-
-
-def _sum_round_counts(
-    state_dir: str, upto_batch: int, subdir: str = "round_counts"
-) -> int | None:
-    """Sum of recorded delta counts for rounds 0..upto_batch.
-
-    A missing round record (state resumed from a pre-ledger run) is
-    BACKFILLED once from the corresponding delta dir's parquet footers
-    — a driver-side metadata read, no Spark job — and written to the
-    ledger, so resumed legacy states stop falling back to the
-    O(accumulated) count scan on every subsequent batch (ADVICE r05:
-    the old early-return made the 'covered from their next batch on'
-    promise false). None only when a round has neither a record nor a
-    committed delta dir."""
-    d = os.path.join(state_dir, subdir)
-    total = 0
-    for b in range(upto_batch + 1):
-        p = os.path.join(d, f"{b:04d}")
-        try:
-            with open(p) as f:
-                total += int(f.read())
-        except (OSError, ValueError):
-            data_dir, part = _LEDGER_DATA[subdir]
-            n = _parquet_rows(
-                os.path.join(state_dir, data_dir, f"{part}={b}")
-            )
-            if n is None:
-                return None
-            _write_round_count(state_dir, b, n, subdir=subdir)
-            total += n
-    return total
-
-
-def epoch_already_processed(state_dir: str, epoch_marker: str) -> bool:
-    """True iff a done marker carrying this content exists — the
-    foreachBatch replay guard. Structured Streaming's foreachBatch is
-    at-least-once: a crash after the done marker but before the
-    checkpoint WAL commit re-delivers the SAME epoch_id, which would
-    re-ingest the same records under a fresh batch id (duplicated
-    scored pairs make every affected pair its own runner-up, so a
-    global-mode ratio test would silently revoke genuine matches).
-    Marker content keys the dedup — ``md5(checkpoint_dir):epoch_id``
-    when the caller scopes it (make_process_batch run_scope; epoch ids
-    restart at 0 per checkpoint location, so an unscoped marker would
-    make a NEW query over the same state skip its first batches), bare
-    str(epoch_id) otherwise; run_incremental's 'ok' markers never
-    collide with either."""
-    done_dir = os.path.join(state_dir, "done")
-    if not os.path.isdir(done_dir):
-        return False
-    # O(1) fast path: every commit also writes a content-NAMED twin
-    # (_content_done), so a processed epoch resolves in one exists()
-    if os.path.exists(_content_done(state_dir, epoch_marker)):
-        return True
-    # a state whose every batch marker has a twin is fully migrated:
-    # absence of the twin IS the answer — no file opens. (Commit order
-    # writes _DONE_N before its twin, so a crash in between leaves
-    # fewer twins than markers and the content scan below still finds
-    # the committed epoch, re-writing the missing twin.)
-    names = os.listdir(done_dir)
-    batch_markers = [
-        n
-        for n in names
-        if n.startswith("_DONE_") and not n.startswith("_DONE_C_")
-    ]
-    n_twins = sum(1 for n in names if n.startswith("_DONE_C_"))
-    if n_twins >= len(batch_markers):
-        return False
-    # one full scan migrates EVERY legacy marker to its twin, so a
-    # resumed pre-upgrade stream pays this walk once, not per epoch
-    found = False
-    for name in batch_markers:
-        try:
-            with open(os.path.join(done_dir, name)) as f:
-                content = f.read()
-        except OSError:
-            continue
-        try:
-            with open(_content_done(state_dir, content), "w") as g:
-                g.write(name[len("_DONE_"):])
-        except OSError:
-            pass
-        if content == epoch_marker:
-            found = True
-    return found
-
-
 def _derived_batch_partitions(
     prev_rows: int, session_default: int
 ) -> int | None:
@@ -1161,54 +782,42 @@ def process_one_batch(
     state_dir: str,
     b: int,
     marker_text: str = "ok",
-    scored_snapshots: bool = True,
 ) -> None:
     """One incremental round (see _process_one_batch_impl for the full
-    step contract). This wrapper scopes
+    step contract). A state dir in an older layout raises ValueError
+    before any work. This wrapper scopes
     ``cfg.batch_shuffle_partitions``: batch-sized shuffles at the
     cluster-wide partition default pay fixed per-partition scheduling
     cost AQE doesn't remove (measured 10-20% of the micro-batch floor
     — BASELINE.md), so the session's shuffle-partition count is
     lowered for the batch and restored after, crash-safe via finally.
 
-    The partition count DERIVES from the feature-count ledger by
-    default (VERDICT r05 #4 — the capstone configuration is now the
-    default): clamp(prev_batch_rows/4096, 8, session default), using
-    the PREVIOUS batch's recorded size (batches are similarly sized;
-    reading the ledger costs one file open, zero Spark actions). Batch
-    0, or a state with no ledger, runs unscoped. Explicit N overrides;
-    0 disables scoping entirely. Behavior change: None used to mean
-    "leave the session setting alone" and now derives a per-batch
-    value, so callers that relied on the old no-op must pass 0."""
+    The partition count DERIVES from the previous batch's feature
+    rows by default (VERDICT r05 #4 — the capstone configuration is
+    now the default): clamp(prev_batch_rows/4096, 8, session default)
+    (batches are similarly sized; the footers of ``features/batch=b-1``
+    answer with zero Spark actions). Batch 0 runs unscoped. Explicit N
+    overrides; 0 disables scoping entirely. Behavior change: None used
+    to mean "leave the session setting alone" and now derives a
+    per-batch value, so callers that relied on the old no-op must
+    pass 0."""
+    check_layout(state_dir)
     scoped = cfg.batch_shuffle_partitions
     key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
     try:
-        session_default = int(spark.conf.get(key))
+        session_default = int(prev)
     except (TypeError, ValueError):
         session_default = 200
     if scoped is None and b > 0:
-        # only the previous round's size matters — read that one record
-        try:
-            with open(
-                os.path.join(state_dir, "feat_counts", f"{b - 1:04d}")
-            ) as f:
-                prev_rows = int(f.read())
-        except (OSError, ValueError):
-            prev_rows = None
+        prev_rows = StateTree(state_dir, "features", "batch").rows(b - 1)
         if prev_rows is not None:
             scoped = _derived_batch_partitions(prev_rows, session_default)
-    if not scoped:
-        _process_one_batch_impl(
-            spark, new_transcripts, cfg, state_dir, b, marker_text,
-            scored_snapshots,
-        )
-        return
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(scoped))
+    if scoped:
+        spark.conf.set(key, str(scoped))
     try:
         _process_one_batch_impl(
-            spark, new_transcripts, cfg, state_dir, b, marker_text,
-            scored_snapshots,
+            spark, new_transcripts, cfg, state_dir, b, marker_text
         )
     finally:
         spark.conf.set(key, prev)
@@ -1221,7 +830,6 @@ def _process_one_batch_impl(
     state_dir: str,
     b: int,
     marker_text: str = "ok",
-    scored_snapshots: bool = True,
 ) -> None:
     """One incremental round over a batch of transcript turns — the
     SHARED step behind run_incremental (chunked batch loop) and
@@ -1229,52 +837,34 @@ def _process_one_batch_impl(
     the batch's features, stream-static candidates + scoring with a
     per-round snapshot (W5), decision deltas (global configs re-decide
     over accumulated scored state — module docstring), component-state
-    update, terminal done marker.
-
-    scored_snapshots=False skips the per-round scored-pair snapshot
-    (W5) for lean threshold-mode streams — the snapshot is the widest
-    intermediate and nothing reads it in threshold mode; global
-    configs REQUIRE it (the accumulated re-decision reads the whole
-    scored_rounds tree), so the flag is overridden there."""
+    update, terminal commit marker. Each tree folds on the shared
+    cadence right after its delta is written (StateTree.fold)."""
     global_mode = _is_global_mode(cfg)
-    scored_snapshots = scored_snapshots or global_mode
-    os.makedirs(os.path.join(state_dir, "done"), exist_ok=True)
+    features = StateTree(state_dir, "features", "batch")
+    scored_rounds = StateTree(state_dir, "scored_rounds", "round")
+    matches = StateTree(state_dir, "matches", "batch")
     _t0 = time.monotonic()
     feats_new = featurize(assemble_conversations(new_transcripts), cfg)
 
     # 1. append this batch's features (idempotent partition write),
-    #    then read the full state back — snapshot ∪ delta dirs ≤ b, so
-    #    a crashed later batch's partial files are never visible and
-    #    the scanned file count stays bounded (_snapshot_tree)
-    feats_new.select(*_FEATURE_COLS).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "features", f"batch={b}")
-    )
+    #    then read the full state back — fold ∪ delta dirs ≤ b, so a
+    #    crashed later batch's partial files are never visible and the
+    #    scanned file count stays bounded (StateTree.read)
+    features.write(b, feats_new.select(*_FEATURE_COLS))
     # featurize persists its tokenized intermediate; the parquet
     # write above materialized everything — release it or every
     # batch leaks one cached RDD for the session lifetime
     _release_upstream(feats_new)
-    feats_new = spark.read.parquet(
-        os.path.join(state_dir, "features", f"batch={b}")
-    )
+    feats_new = spark.read.parquet(features.path(b))
     # batch-sized parquet; certifies the broadcast-restriction gates
     # below. Footer metadata answers exactly — one Spark count job per
     # batch removed (micro-batch floor, guide §1/§5)
-    n_new = _parquet_rows(os.path.join(state_dir, "features", f"batch={b}"))
+    n_new = features.rows(b)
     if n_new is None:
         n_new = feats_new.count()
-    _write_round_count(state_dir, b, n_new, subdir="feat_counts")
-    if b > 0 and _CLUSTER_COMPACT_EVERY and b % _CLUSTER_COMPACT_EVERY == 0:
-        # feature-state fold at the shared compaction cadence: seeds
-        # from the PREVIOUS snapshot (max_snapshot=b-1) so a resume of
-        # this batch never reads the path it overwrites, and sizes its
-        # files from the feat-count ledger. Delta dirs stay on disk —
-        # pruned reads simply stop touching them.
-        _snapshot_coalesce(
-            accumulated_features(spark, state_dir, b, max_snapshot=b - 1),
-            _sum_round_counts(state_dir, b, subdir="feat_counts"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "features_compact", f"batch={b}")
-        )
+    features.fold(
+        b, lambda upto, mf: accumulated_features(spark, state_dir, upto, mf)
+    )
     all_feats = accumulated_features(spark, state_dir, b)
     _t_feat = time.monotonic()
 
@@ -1294,20 +884,10 @@ def _process_one_batch_impl(
         feats_lookup = all_feats.join(
             F.broadcast(_endpoints(cands)), "conv_id", "left_semi"
         )
-    scored = score_pairs(cands, feats_lookup, cfg)
-    if scored_snapshots:
-        scored.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "scored_rounds", f"round={b}")
-        )
-        if not global_mode:
-            # threshold mode decides over THIS round's pairs: read the
-            # snapshot back so the decision reuses the written bytes
-            # instead of recomputing scoring (global mode reads the
-            # whole accumulated tree below instead — this round
-            # included — so a single-round read-back would be unused)
-            scored = spark.read.parquet(
-                os.path.join(state_dir, "scored_rounds", f"round={b}")
-            )
+    scored_rounds.write(b, score_pairs(cands, feats_lookup, cfg))
+    # decide over the written snapshot: reuses its bytes instead of
+    # recomputing scoring
+    scored = spark.read.parquet(scored_rounds.path(b))
 
     # 3. decisions. Threshold mode: pure DELTAS — a pair is decided
     # in exactly one batch. Global mode (ratio/mutual): re-decide
@@ -1318,36 +898,25 @@ def _process_one_batch_impl(
     decide_path = "delta"
     if global_mode:
         keys = ["conv_id_a", "conv_id_b"]
-        delta = spark.read.parquet(
-            os.path.join(state_dir, "scored_rounds", f"round={b}")
-        )
-        n_delta = _parquet_rows(
-            os.path.join(state_dir, "scored_rounds", f"round={b}")
-        )  # footer metadata — no count job
+        n_delta = scored_rounds.rows(b)  # footer metadata — no count job
         if n_delta is None:
-            n_delta = delta.count()
-        _write_round_count(state_dir, b, n_delta)
+            n_delta = scored.count()
         if b > 0:  # any earlier batch (fresh or resumed) wrote state
-            if _CLUSTER_COMPACT_EVERY and b % _CLUSTER_COMPACT_EVERY == 0:
-                # scored-state fold (same cadence + resume contract as
-                # the feature fold): the global re-decision reads the
-                # WHOLE accumulated scored tree every batch, so this is
-                # the read it keeps bounded
-                _snapshot_coalesce(
-                    _accumulated_scored(
-                        spark, state_dir, b, max_snapshot=b - 1
-                    ),
-                    _sum_round_counts(state_dir, b),
-                ).write.mode("overwrite").parquet(
-                    os.path.join(state_dir, "scored_compact", f"round={b}")
-                )
+            # the global re-decision reads the WHOLE accumulated scored
+            # tree every batch, so this fold is the read it keeps bounded
+            scored_rounds.fold(
+                b,
+                lambda upto, mf: _accumulated_scored(
+                    spark, state_dir, upto, mf
+                ),
+            )
             acc = _accumulated_scored(spark, state_dir, b)
-            # accumulated size from the per-round count ledger — an
-            # O(batches) file-read instead of an O(accumulated) scan
-            # per batch; legacy states (no ledger) fall back to the
-            # scan once and are covered from their next batch on
-            prev_n = _sum_round_counts(state_dir, b - 1)
-            n_acc = prev_n + n_delta if prev_n is not None else acc.count()
+            # accumulated size from the tree's footers — a metadata
+            # read of one fold + ≤ K deltas instead of an
+            # O(accumulated) count scan per batch
+            n_acc = scored_rounds.total_rows(b)
+            if n_acc is None:
+                n_acc = acc.count()
             decide_path = (
                 "full"
                 if n_acc <= _FULL_REDECIDE_MAX_RATIO * max(n_delta, 1)
@@ -1382,7 +951,7 @@ def _process_one_batch_impl(
                 # window + direct decision branches, adds + revokes)
                 # and un-truncated lineage recomputes the whole chain
                 # per reference (measured 30 s -> 112 s).
-                affected = _endpoints(delta.select(*keys)).localCheckpoint(
+                affected = _endpoints(scored).localCheckpoint(
                     eager=True
                 )
                 # |affected| <= 2 * n_delta, so the common micro-batch
@@ -1412,41 +981,21 @@ def _process_one_batch_impl(
                 )
         else:
             decide_path = "initial"
-            adds = decide_matches(delta, cfg)
+            adds = decide_matches(scored, cfg)
             revoked = spark.createDataFrame(
                 [], "conv_id_a string, conv_id_b string"
             )
-        adds.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "matches", f"batch={b}")
+        matches.write(b, adds)
+        StateTree(state_dir, "revoked", "batch").write(b, revoked)
+        # the cluster step below already reads the folded view
+        matches.fold(
+            b,
+            lambda upto, mf: accumulated_matches(spark, state_dir, upto, mf),
         )
-        revoked.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "revoked", f"batch={b}")
-        )
-        if b > 0 and _CLUSTER_COMPACT_EVERY and b % _CLUSTER_COMPACT_EVERY == 0:
-            # match-set snapshot at the same cadence as the cluster
-            # compaction: folds all deltas so far so accumulated reads
-            # prune to [snapshot, now] (the delta trees stay — the
-            # round timeseries needs full history). _SUCCESS commits
-            # it; the cluster step below already reads the pruned view.
-            # max_snapshot=b-1: a crash that committed this snapshot
-            # but not the done marker must rebuild it from the
-            # PREVIOUS compaction on resume — seeding from batch=b
-            # itself would overwrite a path being read (fatal on every
-            # subsequent resume attempt).
-            accumulated_matches(
-                spark, state_dir, upto_batch=b, max_snapshot=b - 1
-            ).write.mode("overwrite").parquet(
-                os.path.join(state_dir, "matches_compact", f"batch={b}")
-            )
         _cluster_delta_step(spark, state_dir, b, cfg)
     else:
-        new_matches = decide_matches(scored, cfg)
-        new_matches.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "matches", f"batch={b}")
-        )
-        new_matches = spark.read.parquet(
-            os.path.join(state_dir, "matches", f"batch={b}")
-        )
+        matches.write(b, decide_matches(scored, cfg))
+        new_matches = spark.read.parquet(matches.path(b))
 
         # 4. incremental CC over the reduced component graph
         # (global mode recomputes CC at read time instead — merges
@@ -1458,7 +1007,7 @@ def _process_one_batch_impl(
     # attribution captured around the phases already executed — adds
     # ZERO Spark actions. Phase boundaries are the parquet writes, so
     # lazily-fused work lands in the phase whose write materialized
-    # it (threshold mode without snapshots: scoring lands in decide).
+    # it.
     _t_end = time.monotonic()
     audit_dir = os.path.join(state_dir, "audit")
     os.makedirs(audit_dir, exist_ok=True)
@@ -1476,13 +1025,7 @@ def _process_one_batch_impl(
             f,
         )
 
-    with open(_done(state_dir, b), "w") as f:
-        f.write(marker_text)
-    # content-named twin AFTER the commit marker (a crash in between
-    # is healed by the guard's legacy scan) — replay lookup becomes one
-    # os.path.exists
-    with open(_content_done(state_dir, marker_text), "w") as f:
-        f.write(f"{b:04d}")
+    commit(state_dir, b, marker_text)
 
 
 def read_batch_audit(spark: SparkSession, state_dir: str) -> DataFrame:

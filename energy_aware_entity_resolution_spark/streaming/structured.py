@@ -7,9 +7,7 @@ The reference's streaming entry is a Kafka consumer with count windows
 
 Count-based windows aren't native, so each micro-batch plays the role
 of one window (W1); `Trigger.AvailableNow` gives the reference's
-idle-timeout finalization (W3: drain everything, then stop); late data
-is bounded with a watermark when event-time windows are used (W6 — the
-reference has none; we add it on the windowed-aggregation path only).
+idle-timeout finalization (W3: drain everything, then stop).
 
 `stream_transcripts_demo` drives the whole loop from a parquet
 directory source so tests exercise the real streaming machinery
@@ -142,36 +140,23 @@ def stream_assemble_conversations(
     )
 
 
-def windowed_turn_counts(stream: DataFrame, window: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
-    """W2/W6: event-time tumbling window aggregation with a watermark
-    bounding late data."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "role")
-        .agg(F.count("*").alias("n_turns"))
-        .select(F.col("win.start").alias("window_start"), "role", "n_turns")
-    )
-
-
 def make_process_batch(
     cfg: PipelineConfig,
     state_dir: str,
-    scored_snapshots: bool = True,
     run_scope: str | None = None,
 ):
     """Build the foreachBatch callable (exposed so tests can drive
     replay semantics directly): one micro-batch = one incremental
     round, the SAME shared step (and state layout) as
     streaming.incremental — per-batch feature/match deltas, per-round
-    scored snapshots (W5, opt-out for lean threshold streams),
-    component remap records; per-batch writes proportional to the
-    batch. Global decision configs (ratio/mutual) re-decide over
-    accumulated scored state, exactly like the chunked loop.
+    scored snapshots (W5), component remap records; per-batch writes
+    proportional to the batch. Global decision configs (ratio/mutual)
+    re-decide over accumulated scored state, exactly like the chunked
+    loop.
 
     Idempotent under foreachBatch's at-least-once replay: a re-delivered
-    epoch (crash between the done marker and the checkpoint commit) is
-    detected by its marker content and skipped — without this, the
+    epoch (crash between the commit marker and the checkpoint commit)
+    is detected by its marker text and skipped — without this, the
     replay would re-ingest the same records under a fresh batch id and
     the duplicated scored pairs would make a global-mode ratio test
     revoke genuine matches (each pair becomes its own runner-up).
@@ -181,28 +166,19 @@ def make_process_batch(
     keyed on the epoch id alone would make a NEW query over the same
     state_dir silently skip its first batches (they collide with old
     markers). Pass the query's checkpoint_dir (stream_incremental_er
-    does) — the marker is then ``md5(run_scope):epoch_id``, unique per
-    (checkpoint, epoch). None keeps the bare epoch key for single-query
-    callers (tests driving the callable directly).
-
-    LEGACY markers (bare ``str(epoch_id)``, committed before the scoped
-    format existed) are ADOPTED exactly once, by the first scoped query
-    to run over the state dir: a content-named twin under that query's
-    scope is written for every bare marker (originals untouched —
-    crash-safe, idempotent), and a ``_SCOPE_ADOPTED`` flag closes the
-    window. The resumed pre-upgrade stream therefore still skips its
-    committed epochs, while LATER new queries attached to the same
-    state process their epoch 0..N normally instead of silently
-    inheriting another query's markers (ADVICE r05: the unconditional
-    bare-marker fallback reintroduced the collision run_scope fixed)."""
+    does) — the marker text is then ``md5(run_scope)[:12]:epoch_id``,
+    unique per (checkpoint, epoch). None keeps the bare epoch for
+    single-query callers (tests driving the callable directly). A
+    scoped query never matches an unscoped query's markers, nor the
+    reverse."""
     import hashlib
-    import os
 
     from energy_aware_entity_resolution_spark.streaming.incremental import (
-        _content_done,
+        process_one_batch,
+    )
+    from energy_aware_entity_resolution_spark.streaming.state import (
         epoch_already_processed,
         last_complete_batch,
-        process_one_batch,
     )
 
     scope = (
@@ -211,31 +187,9 @@ def make_process_batch(
         else ""
     )
 
-    def adopt_legacy_markers_once() -> None:
-        done_dir = os.path.join(state_dir, "done")
-        flag = os.path.join(done_dir, "_SCOPE_ADOPTED")
-        if not scope or not os.path.isdir(done_dir) or os.path.exists(flag):
-            return
-        for name in sorted(os.listdir(done_dir)):
-            if not name.startswith("_DONE_") or name.startswith("_DONE_C_"):
-                continue
-            try:
-                with open(os.path.join(done_dir, name)) as f:
-                    content = f.read()
-            except OSError:
-                continue
-            if content.isdigit():  # pre-upgrade bare epoch marker
-                with open(
-                    _content_done(state_dir, f"{scope}{content}"), "w"
-                ) as f:
-                    f.write(name[len("_DONE_"):])
-        with open(flag, "w") as f:
-            f.write(scope)
-
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        adopt_legacy_markers_once()  # one exists() once adopted
         marker = f"{scope}{epoch_id}"
         if epoch_already_processed(state_dir, marker):
             return  # replayed epoch of THIS query: already committed
@@ -243,7 +197,6 @@ def make_process_batch(
         process_one_batch(
             batch_df.sparkSession, batch_df, cfg, state_dir, b,
             marker_text=marker,
-            scored_snapshots=scored_snapshots,
         )
 
     return process_batch
@@ -254,7 +207,6 @@ def stream_incremental_er(
     cfg: PipelineConfig,
     state_dir: str,
     checkpoint_dir: str,
-    scored_snapshots: bool = True,
 ):
     """foreachBatch wiring: every micro-batch of turns runs one
     incremental ER round against the accumulated state (W4). Returns
@@ -262,9 +214,7 @@ def stream_incremental_er(
     """
     return (
         stream.writeStream.foreachBatch(
-            make_process_batch(
-                cfg, state_dir, scored_snapshots, run_scope=checkpoint_dir
-            )
+            make_process_batch(cfg, state_dir, run_scope=checkpoint_dir)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -9,7 +9,6 @@ from energy_aware_entity_resolution_spark.operators.assemble import (
     assemble_conversations,
 )
 from energy_aware_entity_resolution_spark.operators.blocking import (
-    block_stats,
     cap_blocks,
     featurize,
     lsh_bands,
@@ -64,8 +63,7 @@ def test_block_cap_removes_mega_blocks(spark, transcripts):
     capped = cap_blocks(bands, ["band_id", "band_hash"], CFG.blocking.max_block_size)
     sizes = capped.groupBy("band_id", "band_hash").count()
     assert sizes.where(F.col("count") > CFG.blocking.max_block_size).count() == 0
-    stats = block_stats(bands, ["band_id", "band_hash"]).collect()[0]
-    assert stats["n_blocks"] > 0
+    assert sizes.count() > 0
 
 
 def test_salted_self_join_equals_plain_join(spark):

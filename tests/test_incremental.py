@@ -94,6 +94,14 @@ def test_incremental_writes_proportional_to_batch(spark, transcripts, tmp_path):
     n_matches = matches.count()
     assert remaps.count() <= 2 * n_matches  # component state bounded by merges
 
+    # one commit marker per batch, and no count ledgers
+    import os
+
+    assert len(os.listdir(f"{state}/done")) == n_batches
+    assert not any(n.startswith("_DONE_C_") for n in os.listdir(f"{state}/done"))
+    assert not os.path.exists(f"{state}/feat_counts")
+    assert not os.path.exists(f"{state}/round_counts")
+
 
 def test_incremental_matches_batch_global_configs(spark, transcripts, tmp_path):
     """W4 with GLOBAL decision semantics: ratio test + mutual_only read
@@ -227,14 +235,15 @@ def test_global_neighborhood_equals_full_on_dense_graphs(
 
 
 def test_global_cluster_ledger_compaction(spark, transcripts, tmp_path, monkeypatch):
-    """Ledger compaction: every K-th global batch folds the full
-    current assignment into its partition and drops a marker, after
-    which reads prune to [compaction, now]. Proof of pruning: deleting
-    every pre-compaction batch partition must not change the resolved
-    clusters."""
+    """Ledger folds: every K-th global batch folds the full current
+    assignment into ``clusters_compact/batch=N``, after which reads
+    prune to [fold, now]. Proof of pruning: deleting every pre-fold
+    batch partition must not change the resolved clusters. Every fold
+    of every tree is a ``<tree>_compact/<part>=N`` dir committed by
+    ``_SUCCESS`` — no plain marker files."""
     import shutil
 
-    import energy_aware_entity_resolution_spark.streaming.incremental as inc
+    import energy_aware_entity_resolution_spark.streaming.state as st
     from energy_aware_entity_resolution_spark.config import (
         BlockingConfig,
         ScoringConfig,
@@ -243,7 +252,7 @@ def test_global_cluster_ledger_compaction(spark, transcripts, tmp_path, monkeypa
         resolve_clusters,
     )
 
-    monkeypatch.setattr(inc, "_CLUSTER_COMPACT_EVERY", 2)
+    monkeypatch.setattr(st, "FOLD_EVERY", 2)
     cfg = PipelineConfig(
         blocking=BlockingConfig(use_sorted_neighborhood=False),
         scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
@@ -251,10 +260,23 @@ def test_global_cluster_ledger_compaction(spark, transcripts, tmp_path, monkeypa
     state = str(tmp_path / "gstate_compact")
     inc_clusters = run_incremental(transcripts, cfg, state, n_batches=4)
     want = _cluster_sets(inc_clusters)
-    # markers for batches 2 (and nothing else <= 1)
+    # folds at batch 2 only (nothing <= 1), each a committed dir
     import os
 
-    assert os.path.exists(f"{state}/clusters_compact/2")
+    folds = {
+        (tree, name)
+        for tree in os.listdir(state)
+        if tree.endswith("_compact")
+        for name in os.listdir(f"{state}/{tree}")
+    }
+    assert folds == {
+        ("features_compact", "batch=2"),
+        ("scored_rounds_compact", "round=2"),
+        ("matches_compact", "batch=2"),
+        ("clusters_compact", "batch=2"),
+    }
+    for tree, name in folds:
+        assert os.path.exists(f"{state}/{tree}/{name}/_SUCCESS")
     batch = run_pipeline(transcripts, cfg)
     assert want == _cluster_sets(batch.clusters)
     # reads must not touch pre-compaction partitions: delete them
@@ -554,13 +576,14 @@ def test_round_timeseries_respects_revokes(spark, tmp_path):
         [("a", "b", 0.9, "ratio")],
         "conv_id_a string, conv_id_b string, score double, decision string",
     ).write.parquet(f"{state}/matches/batch=2")
-    for b in (0, 1):
-        open(f"{state}/done/_DONE_{b:04d}", "w").write("ok")
-
     from energy_aware_entity_resolution_spark.streaming.incremental import (
         accumulated_matches,
         round_evaluation_timeseries,
     )
+    from energy_aware_entity_resolution_spark.streaming.state import commit
+
+    for b in (0, 1):
+        commit(state, b, "ok")
 
     truth = spark.createDataFrame(
         [("a", "b")], "conv_id_a string, conv_id_b string"
@@ -573,15 +596,16 @@ def test_round_timeseries_respects_revokes(spark, tmp_path):
 def test_compaction_resume_after_crash_between_snapshot_and_marker(
     spark, transcripts, tmp_path, monkeypatch
 ):
-    """Crash window: the matches_compact/batch=b snapshot committed
-    (_SUCCESS written) but the done marker didn't land. The resumed
-    batch b rebuilds the snapshot and must seed it from the PREVIOUS
-    compaction — reading the batch=b snapshot it is about to overwrite
+    """Fold crash window, all four trees: batch b's folds committed
+    (``_SUCCESS`` written) but its commit marker didn't land. The
+    resumed batch b rebuilds every fold and must seed each from the
+    fold ≤ b-1 — reading the batch=b fold it is about to overwrite
     raises 'Cannot overwrite a path that is also being read from' on
     every resume attempt (permanently wedged state)."""
     import os
 
     import energy_aware_entity_resolution_spark.streaming.incremental as inc
+    import energy_aware_entity_resolution_spark.streaming.state as st
     from energy_aware_entity_resolution_spark.config import (
         BlockingConfig,
         ScoringConfig,
@@ -590,7 +614,7 @@ def test_compaction_resume_after_crash_between_snapshot_and_marker(
         accumulated_matches,
     )
 
-    monkeypatch.setattr(inc, "_CLUSTER_COMPACT_EVERY", 2)
+    monkeypatch.setattr(st, "FOLD_EVERY", 2)
     cfg = PipelineConfig(
         blocking=BlockingConfig(use_sorted_neighborhood=False),
         scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
@@ -598,7 +622,7 @@ def test_compaction_resume_after_crash_between_snapshot_and_marker(
     state = str(tmp_path / "crash_state")
     # batches 0..2 of a 4-batch run complete (same pmod batching as
     # run_incremental so the resumed batch 2 holds the same convs);
-    # batch 2 is a compaction batch
+    # batch 2 is a fold batch for every tree
     batched = transcripts.withColumn(
         "_b", F.pmod(F.xxhash64("conv_id"), F.lit(4))
     )
@@ -606,12 +630,22 @@ def test_compaction_resume_after_crash_between_snapshot_and_marker(
         inc.process_one_batch(
             spark, batched.where(F.col("_b") == b).drop("_b"), cfg, state, b
         )
-    assert os.path.exists(f"{state}/matches_compact/batch=2/_SUCCESS")
-    # simulate the crash: snapshot committed, done marker lost
-    os.remove(f"{state}/done/_DONE_0002")
+    folds = [
+        f"{state}/features_compact/batch=2/_SUCCESS",
+        f"{state}/scored_rounds_compact/round=2/_SUCCESS",
+        f"{state}/matches_compact/batch=2/_SUCCESS",
+        f"{state}/clusters_compact/batch=2/_SUCCESS",
+    ]
+    assert all(os.path.exists(f) for f in folds)
+    # simulate the crash: folds committed, commit marker lost
+    (marker,) = [
+        n for n in os.listdir(f"{state}/done") if n.startswith("_DONE_0002_")
+    ]
+    os.remove(f"{state}/done/{marker}")
     assert last_complete_batch(state) == 1
-    # resume replays batch 2 (rebuilding the snapshot in place) + 3
+    # resume replays batch 2 (rebuilding every fold in place) + 3
     final = run_incremental(transcripts, cfg, state, n_batches=4, resume=True)
+    assert all(os.path.exists(f) for f in folds)
     full_state = str(tmp_path / "crash_full")
     full = run_incremental(transcripts, cfg, full_state, n_batches=4)
     assert _cluster_sets(final) == _cluster_sets(full)
@@ -626,49 +660,88 @@ def test_compaction_resume_after_crash_between_snapshot_and_marker(
     assert got == want
 
 
-def test_legacy_global_state_bootstraps_cluster_ledger(
-    spark, transcripts, tmp_path
-):
-    """A pre-ledger (legacy) global-mode state dir has no ``clusters``
-    tree. Resuming it must bootstrap the ledger with one full-CC
-    compaction batch — not crash on the missing path, and not treat
-    historically-clustered ids as singletons."""
+def test_legacy_state_layout_rejected(spark, tmp_path):
+    """A state dir written in an older layout raises ValueError naming
+    the dir, from both process_one_batch and resolve_clusters, before
+    any Spark job: a bare ``_DONE_N`` marker, a content twin, the count
+    ledgers, a plain ``clusters_compact/N`` marker file, and a
+    global-mode state with commits but no ``clusters/`` tree."""
     import os
-    import shutil
+    import re
 
-    from energy_aware_entity_resolution_spark.config import (
-        BlockingConfig,
-        ScoringConfig,
+    import pytest
+
+    from energy_aware_entity_resolution_spark.streaming.incremental import (
+        process_one_batch,
+        resolve_clusters,
+    )
+    from energy_aware_entity_resolution_spark.streaming.state import commit
+
+    def touch(path):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        open(path, "w").close()
+
+    layouts = {
+        "bare_marker": ["done/_DONE_0000"],
+        "content_twin": ["done/_DONE_C_" + "0" * 32],
+        "feat_counts": ["feat_counts/0000"],
+        "round_counts": ["round_counts/0000"],
+        "cluster_marker_file": ["clusters_compact/16"],
+        "global_without_clusters": ["revoked/batch=0/_SUCCESS"],
+    }
+    empty = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    for name, files in layouts.items():
+        state = str(tmp_path / name)
+        commit(state, 0, "ok")
+        for f in files:
+            touch(os.path.join(state, f))
+        with pytest.raises(ValueError, match=re.escape(state)):
+            process_one_batch(spark, empty, PipelineConfig(), state, 1)
+        with pytest.raises(ValueError, match=re.escape(state)):
+            resolve_clusters(spark, state)
+
+
+def test_replay_marker_lookup_is_content_named(spark, transcripts, tmp_path):
+    """One empty commit marker per batch, named by the batch and the
+    md5 of its marker text, so the replay guard is one listdir. Scoped
+    and unscoped callers never match each other's markers: an unscoped
+    epoch 0 does not cover a scoped query's epoch 0, and once that
+    scoped epoch has run, an unscoped replay of 0 is still skipped."""
+    import hashlib
+    import os
+
+    from energy_aware_entity_resolution_spark.streaming.structured import (
+        make_process_batch,
     )
 
-    cfg = PipelineConfig(
-        blocking=BlockingConfig(use_sorted_neighborhood=False),
-        scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
-    )
-    state = str(tmp_path / "legacy_state")
-    first = transcripts.withColumn(
-        "_b", F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    )
-    run_incremental(
-        first.where(F.col("_b") <= 1).drop("_b"), cfg, state, n_batches=2
-    )
-    # strip the ledger: what a pre-round-4 state dir looks like
-    shutil.rmtree(f"{state}/clusters")
-    if os.path.isdir(f"{state}/clusters_compact"):
-        shutil.rmtree(f"{state}/clusters_compact")
-    final = run_incremental(transcripts, cfg, state, n_batches=4, resume=True)
-    full = run_incremental(
-        transcripts, cfg, str(tmp_path / "legacy_full"), n_batches=4
-    )
-    assert _cluster_sets(final) == _cluster_sets(full)
-    # the bootstrap left a committed compaction marker
-    assert os.path.exists(f"{state}/clusters_compact/1")
+    def md5(text):
+        return hashlib.md5(text.encode()).hexdigest()
+
+    cfg = PipelineConfig()
+    state = str(tmp_path / "marker_state")
+    scope = str(tmp_path / "ckpt")
+    unscoped = make_process_batch(cfg, state)
+    scoped = make_process_batch(cfg, state, run_scope=scope)
+    unscoped(transcripts, epoch_id=0)
+    assert last_complete_batch(state) == 0
+    scoped(transcripts, epoch_id=0)  # another query's epoch 0: runs
+    assert last_complete_batch(state) == 1
+    unscoped(transcripts, epoch_id=0)  # replays: skipped
+    scoped(transcripts, epoch_id=0)
+    assert last_complete_batch(state) == 1
+    assert sorted(os.listdir(f"{state}/done")) == [
+        f"_DONE_0000_{md5('0')}",
+        f"_DONE_0001_{md5(md5(scope)[:12] + ':0')}",
+    ]
 
 
 def test_feature_and_scored_state_folds(
     spark, transcripts, tmp_path, monkeypatch
 ):
-    """Round-5 state folds: every K-th batch folds the features tree
+    """State folds: every K-th batch folds the features tree
     (both modes) and, in global mode, the accumulated scored tree into
     a committed snapshot; accumulated reads then touch the snapshot +
     later deltas only. Proofs: (a) inputFiles of the pruned readers
@@ -678,7 +751,7 @@ def test_feature_and_scored_state_folds(
     import os
     import shutil
 
-    import energy_aware_entity_resolution_spark.streaming.incremental as inc
+    import energy_aware_entity_resolution_spark.streaming.state as st
     from energy_aware_entity_resolution_spark.config import (
         BlockingConfig,
         ScoringConfig,
@@ -689,7 +762,7 @@ def test_feature_and_scored_state_folds(
         resolve_clusters,
     )
 
-    monkeypatch.setattr(inc, "_CLUSTER_COMPACT_EVERY", 2)
+    monkeypatch.setattr(st, "FOLD_EVERY", 2)
     cfg = PipelineConfig(
         blocking=BlockingConfig(use_sorted_neighborhood=False),
         scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
@@ -702,7 +775,7 @@ def test_feature_and_scored_state_folds(
     batch.release()
 
     assert os.path.exists(f"{state}/features_compact/batch=2/_SUCCESS")
-    assert os.path.exists(f"{state}/scored_compact/round=2/_SUCCESS")
+    assert os.path.exists(f"{state}/scored_rounds_compact/round=2/_SUCCESS")
     # (a) row parity: fold ∪ later deltas == the raw tree, exactly —
     # any pruning bug (filter lost, fold overlapping a delta) shows as
     # a count mismatch. (inputFiles() can't prove file pruning: it
@@ -730,48 +803,6 @@ def test_feature_and_scored_state_folds(
     assert _cluster_sets(resolve_clusters(spark, state)) == want
 
 
-def test_feature_fold_resume_and_legacy_ledger(
-    spark, transcripts, tmp_path, monkeypatch
-):
-    """Fold crash window + legacy states. (1) A crash after the
-    features/scored folds committed (_SUCCESS) but before the done
-    marker: the resumed fold batch rebuilds both snapshots seeded from
-    the PREVIOUS fold (max_snapshot=b-1) — never the path it
-    overwrites. (2) A legacy state without feat_counts ledger entries
-    folds with no coalesce sizing instead of crashing."""
-    import os
-
-    import energy_aware_entity_resolution_spark.streaming.incremental as inc
-    from energy_aware_entity_resolution_spark.config import (
-        BlockingConfig,
-        ScoringConfig,
-    )
-
-    monkeypatch.setattr(inc, "_CLUSTER_COMPACT_EVERY", 2)
-    cfg = PipelineConfig(
-        blocking=BlockingConfig(use_sorted_neighborhood=False),
-        scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
-    )
-    state = str(tmp_path / "fold_crash")
-    batched = transcripts.withColumn(
-        "_b", F.pmod(F.xxhash64("conv_id"), F.lit(4))
-    )
-    for b in range(3):
-        inc.process_one_batch(
-            spark, batched.where(F.col("_b") == b).drop("_b"), cfg, state, b
-        )
-    assert os.path.exists(f"{state}/features_compact/batch=2/_SUCCESS")
-    # legacy shape: pre-fold states carried no feat-count ledger
-    os.remove(f"{state}/feat_counts/0000")
-    # crash: folds committed, done marker lost
-    os.remove(f"{state}/done/_DONE_0002")
-    final = run_incremental(transcripts, cfg, state, n_batches=4, resume=True)
-    full = run_incremental(
-        transcripts, cfg, str(tmp_path / "fold_full"), n_batches=4
-    )
-    assert _cluster_sets(final) == _cluster_sets(full)
-
-
 def test_batch_shuffle_partitions_scoped_and_equal(
     spark, transcripts, tmp_path
 ):
@@ -787,7 +818,7 @@ def test_batch_shuffle_partitions_scoped_and_equal(
     )
     assert spark.conf.get(key) == before  # restored after every batch
     # batch_shuffle_partitions=0 disables scoping entirely; None (the
-    # default) DERIVES from the feature-count ledger — both must
+    # default) DERIVES from the previous batch's feature rows — both must
     # produce identical state (physical parallelism only)
     plain = run_incremental(
         transcripts,
@@ -815,56 +846,3 @@ def test_derived_batch_partitions_formula():
     assert _derived_batch_partitions(10_000_000, 32) is None  # >= default
     assert _derived_batch_partitions(100, 8) is None  # floor == default
 
-
-def test_replay_marker_lookup_is_content_named(spark, transcripts, tmp_path):
-    """Every commit writes a content-named twin, so the replay guard's
-    positive lookup is one exists() and a fully-twinned state answers
-    negatives without opening marker files; legacy (twin-less) states
-    are migrated in one scan."""
-    import os
-
-    from energy_aware_entity_resolution_spark.streaming.incremental import (
-        _content_done,
-        epoch_already_processed,
-        process_one_batch,
-    )
-
-    state = str(tmp_path / "marker_state")
-    cfg = PipelineConfig()
-    process_one_batch(spark, transcripts, cfg, state, 0, marker_text="m:0")
-    assert os.path.exists(_content_done(state, "m:0"))
-    assert epoch_already_processed(state, "m:0")
-    assert not epoch_already_processed(state, "m:1")
-    # simulate a legacy state: drop the twin — the content scan still
-    # finds the epoch AND rewrites the twin (one-time migration)
-    os.remove(_content_done(state, "m:0"))
-    assert epoch_already_processed(state, "m:0")
-    assert os.path.exists(_content_done(state, "m:0"))
-
-
-def test_round_count_ledger_backfills_from_footers(
-    spark, transcripts, tmp_path
-):
-    """A state resumed from a pre-ledger run (missing early count
-    records) backfills them once from the delta dirs' parquet footers
-    instead of returning None forever (ADVICE r05)."""
-    import os
-
-    from energy_aware_entity_resolution_spark.streaming.incremental import (
-        _parquet_rows,
-        _sum_round_counts,
-    )
-
-    state = str(tmp_path / "ledger_state")
-    run_incremental(transcripts, PipelineConfig(), state, n_batches=3)
-    full = _sum_round_counts(state, 2, subdir="feat_counts")
-    assert full is not None and full > 0
-    # wipe one ledger record — the sum must still come back (backfilled
-    # from features/batch=1 footers) and the record must be rewritten
-    os.remove(os.path.join(state, "feat_counts", "0001"))
-    assert _sum_round_counts(state, 2, subdir="feat_counts") == full
-    assert os.path.exists(os.path.join(state, "feat_counts", "0001"))
-    # footer count agrees with the ledger record
-    n1 = _parquet_rows(os.path.join(state, "features", "batch=1"))
-    with open(os.path.join(state, "feat_counts", "0001")) as f:
-        assert int(f.read()) == n1

@@ -7,6 +7,7 @@ import math
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from energy_aware_entity_resolution_spark.config import PipelineConfig
 from energy_aware_entity_resolution_spark.functions.embeddings import (
@@ -20,15 +21,13 @@ from energy_aware_entity_resolution_spark.functions.minhash import (
 from energy_aware_entity_resolution_spark.functions.similarity import (
     _jaro_winkler,
     jaccard_col,
-    levenshtein_ratio_col,
     make_jaro_winkler_udf,
-    multiset_equal_col,
     multiset_jaccard_col,
 )
 from energy_aware_entity_resolution_spark.operators.decision import (
+    _directed,
     mutual_top1,
     ratio_test,
-    top_n_neighbors,
 )
 
 
@@ -55,26 +54,6 @@ def test_multiset_jaccard_counter_semantics(spark):
     got = df.select(multiset_jaccard_col(F.col("ta"), F.col("tb")).alias("m")).collect()[0]["m"]
     # min counts: a->1, b->1 = 2; max: a->2, b->2 = 4
     assert got == pytest.approx(0.5)
-
-
-def test_levenshtein_ratio(spark):
-    out = (
-        _pairs_df(spark)
-        .select(levenshtein_ratio_col(F.col("sa"), F.col("sb")).alias("r"))
-        .collect()
-    )
-    assert out[0]["r"] == pytest.approx(1.0)
-    assert out[1]["r"] == pytest.approx(1 - 1 / 3)
-    assert out[2]["r"] == pytest.approx(0.0)
-
-
-def test_multiset_equal(spark):
-    df = spark.createDataFrame(
-        [(["b", "a", ""], ["a", "b", "nan"]), (["a"], ["b"])],
-        "ta array<string>, tb array<string>",
-    )
-    got = [r["e"] for r in df.select(multiset_equal_col(F.col("ta"), F.col("tb")).alias("e")).collect()]
-    assert got == [True, False]
 
 
 def test_jaro_winkler_reference_values():
@@ -140,17 +119,19 @@ def _scored(spark):
     return spark.createDataFrame(rows, "conv_id_a string, conv_id_b string, score double")
 
 
-def test_top_n_neighbors(spark):
-    top1 = top_n_neighbors(_scored(spark), 1)
-    best = {r["src"]: (r["dst"], r["score"]) for r in top1.collect()}
-    assert best["a"] == ("b", 0.9)
-    assert best["b"] == ("a", 0.9)
-    assert best["c"] == ("b", 0.5)
-    assert best["d"] == ("a", 0.85)
+def _ranked(scored, n):
+    """Each record's n best neighbors, ranked (score desc, id asc) —
+    the directed input ratio_test and mutual_top1 take."""
+    w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
+    return (
+        _directed(scored)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= n)
+    )
 
 
 def test_ratio_test_keeps_clear_winners(spark):
-    ranked = top_n_neighbors(_scored(spark), 10)
+    ranked = _ranked(_scored(spark), 10)
     kept = ratio_test(ranked, ratio=1.5)
     srcs = {r["src"]: r["dst"] for r in kept.collect()}
     # a: 0.9 vs 0.85 -> ratio 1.06 < 1.5 -> dropped
@@ -160,7 +141,7 @@ def test_ratio_test_keeps_clear_winners(spark):
 
 
 def test_mutual_top1(spark):
-    ranked = top_n_neighbors(_scored(spark), 1)
+    ranked = _ranked(_scored(spark), 1)
     best = ranked.select("src", "dst", "score")
     mutual = {(r["src"], r["dst"]) for r in mutual_top1(best).collect()}
     assert ("a", "b") in mutual and ("b", "a") in mutual

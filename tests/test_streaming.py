@@ -1,6 +1,5 @@
 """Structured Streaming surface: file-source micro-batches drive the
-incremental ER loop via foreachBatch + AvailableNow (W1/W3/W4), and the
-watermarked window agg compiles and produces rows."""
+incremental ER loop via foreachBatch + AvailableNow (W1/W3/W4)."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from energy_aware_entity_resolution_spark.plans import run_pipeline
 from energy_aware_entity_resolution_spark.streaming.structured import (
     file_reader,
     stream_incremental_er,
-    windowed_turn_counts,
 )
 
 
@@ -240,27 +238,6 @@ def test_stream_assemble_idle_timeout_evicts_state(spark, transcripts, tmp_path)
     assert by_conv["conv_00000003"][0]["n_turns"] == new.count()
 
 
-def test_windowed_turn_counts_streaming(spark, transcripts, tmp_path):
-    src_dir = str(tmp_path / "wsrc")
-    transcripts.write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(transcripts.schema).parquet(src_dir)
-    )
-    agg = windowed_turn_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("win_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; completeness is
-    # not the contract here — the streaming plan executing is
-    rows = spark.sql("SELECT * FROM win_counts").collect()
-    assert q.lastProgress is not None
-
-
 def test_stream_incremental_er_global_mode_matches_batch(
     spark, transcripts, tmp_path
 ):
@@ -376,108 +353,6 @@ def test_replay_guard_scoped_to_checkpointed_query(spark, transcripts, tmp_path)
     assert last_complete_batch(state) == 1
 
 
-def test_stream_threshold_mode_snapshot_opt_out(spark, transcripts, tmp_path):
-    """scored_snapshots=False: the lean threshold-mode stream skips the
-    widest-intermediate write entirely and still converges."""
-    import os
-
-    from energy_aware_entity_resolution_spark.streaming.incremental import (
-        resolve_clusters,
-    )
-
-    src = _stage_parquet_chunks(spark, transcripts, str(tmp_path / "lsrc"), 2)
-    state = str(tmp_path / "lstate")
-    q = stream_incremental_er(
-        file_reader(spark, src, max_files_per_trigger=1),
-        PipelineConfig(),
-        state_dir=state,
-        checkpoint_dir=str(tmp_path / "lckpt"),
-        scored_snapshots=False,
-    )
-    q.awaitTermination(300)
-    assert not os.path.isdir(os.path.join(state, "scored_rounds"))
-    assert resolve_clusters(spark, state).count() > 0
-
-
-def test_replay_guard_accepts_legacy_bare_markers(spark, transcripts, tmp_path):
-    """Markers committed before the scoped-marker format existed are
-    bare str(epoch_id). A resumed pre-upgrade stream (now passing
-    run_scope) must still recognize those epochs as processed — else
-    it re-ingests them under fresh batch ids, the silent global-mode
-    revocation the guard documents."""
-    import os
-
-    from energy_aware_entity_resolution_spark.config import (
-        BlockingConfig,
-        ScoringConfig,
-    )
-    from energy_aware_entity_resolution_spark.streaming.incremental import (
-        last_complete_batch,
-    )
-    from energy_aware_entity_resolution_spark.streaming.structured import (
-        make_process_batch,
-    )
-
-    cfg = PipelineConfig(
-        blocking=BlockingConfig(use_sorted_neighborhood=False),
-        scoring=ScoringConfig(ratio_threshold=1.05),
-    )
-    state = str(tmp_path / "legacy_marker_state")
-    # legacy epoch 0: committed under the pre-upgrade bare marker
-    legacy = make_process_batch(cfg, state, run_scope=None)
-    legacy(transcripts, epoch_id=0)
-    assert last_complete_batch(state) == 0
-    with open(f"{state}/done/_DONE_0000") as f:
-        assert f.read() == "0"  # bare format, by construction
-    # post-upgrade resume of the SAME query, now scoped: epoch 0
-    # replay must be skipped via the legacy marker
-    upgraded = make_process_batch(
-        cfg, state, run_scope=str(tmp_path / "ckpt_legacy")
-    )
-    upgraded(transcripts, epoch_id=0)
-    assert last_complete_batch(state) == 0  # not re-ingested
-    upgraded(transcripts, epoch_id=1)  # new epochs still process
-    assert last_complete_batch(state) == 1
-
-
-def test_legacy_markers_adopted_by_first_scoped_query_only(
-    spark, transcripts, tmp_path
-):
-    """ADVICE r05: the bare-marker fallback must not be permanent. The
-    FIRST scoped query over a pre-upgrade state adopts the bare
-    markers (its replayed epochs skip); a LATER query with a different
-    scope attached to the same state processes its epoch 0 normally
-    instead of silently inheriting the old markers."""
-    from energy_aware_entity_resolution_spark.config import (
-        BlockingConfig,
-        ScoringConfig,
-    )
-    from energy_aware_entity_resolution_spark.streaming.incremental import (
-        last_complete_batch,
-    )
-    from energy_aware_entity_resolution_spark.streaming.structured import (
-        make_process_batch,
-    )
-
-    cfg = PipelineConfig(
-        blocking=BlockingConfig(use_sorted_neighborhood=False),
-        scoring=ScoringConfig(ratio_threshold=1.05),
-    )
-    state = str(tmp_path / "adopt_state")
-    legacy = make_process_batch(cfg, state, run_scope=None)
-    legacy(transcripts, epoch_id=0)
-    assert last_complete_batch(state) == 0
-    # first scoped query adopts: its epoch 0 replay is skipped
-    first = make_process_batch(cfg, state, run_scope=str(tmp_path / "ck1"))
-    first(transcripts, epoch_id=0)
-    assert last_complete_batch(state) == 0
-    # a DIFFERENT query's epoch 0 is NOT covered by the adopted
-    # markers — it processes normally (the pre-fix fallback skipped it)
-    second = make_process_batch(cfg, state, run_scope=str(tmp_path / "ck2"))
-    second(transcripts, epoch_id=0)
-    assert last_complete_batch(state) == 1
-
-
 def test_stream_global_mode_with_state_folds(
     spark, transcripts, tmp_path, monkeypatch
 ):
@@ -489,7 +364,7 @@ def test_stream_global_mode_with_state_folds(
     test_incremental)."""
     import os
 
-    import energy_aware_entity_resolution_spark.streaming.incremental as inc
+    import energy_aware_entity_resolution_spark.streaming.state as st
     from energy_aware_entity_resolution_spark.config import (
         BlockingConfig,
         ScoringConfig,
@@ -500,7 +375,7 @@ def test_stream_global_mode_with_state_folds(
         resolve_clusters,
     )
 
-    monkeypatch.setattr(inc, "_CLUSTER_COMPACT_EVERY", 2)
+    monkeypatch.setattr(st, "FOLD_EVERY", 2)
     cfg = PipelineConfig(
         blocking=BlockingConfig(use_sorted_neighborhood=False),
         scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
@@ -515,8 +390,13 @@ def test_stream_global_mode_with_state_folds(
     )
     q.awaitTermination(300)
 
-    assert os.path.exists(f"{state}/features_compact/batch=2/_SUCCESS")
-    assert os.path.exists(f"{state}/scored_compact/round=2/_SUCCESS")
+    for tree, part in (
+        ("features", "batch"),
+        ("scored_rounds", "round"),
+        ("matches", "batch"),
+        ("clusters", "batch"),
+    ):
+        assert os.path.exists(f"{state}/{tree}_compact/{part}=2/_SUCCESS")
     batch = run_pipeline(transcripts, cfg)
     got = {
         (r["conv_id_a"], r["conv_id_b"])
