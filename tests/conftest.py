@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from energy_aware_entity_resolution_spark import get_spark
@@ -11,7 +13,13 @@ def spark():
         app_name="er-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024)},
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+            # the fixtures are a few hundred conversations; without a
+            # cap the heap grows toward get_spark's 48g default and a
+            # 16 GB machine runs out of memory late in the suite
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "4g"),
+        },
     )
     yield s
 

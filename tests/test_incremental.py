@@ -803,6 +803,67 @@ def test_feature_and_scored_state_folds(
     assert _cluster_sets(resolve_clusters(spark, state)) == want
 
 
+def test_feature_fold_resume_and_legacy_ledger(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """Fold crash window at a later fold + a legacy count ledger.
+    (1) A crash after batch 2's folds committed but before its commit
+    marker, with batch 1 already folded: the resumed batch 2 rebuilds
+    the features and scored folds seeded from the batch=1 fold, never
+    the batch=2 fold it overwrites. (2) A ``feat_counts/`` ledger left
+    in that crashed state makes the resume raise ValueError before
+    writing anything; without it the same resume finishes and equals
+    the batch run."""
+    import os
+    import re
+    import shutil
+
+    import pytest
+
+    import energy_aware_entity_resolution_spark.streaming.incremental as inc
+    import energy_aware_entity_resolution_spark.streaming.state as st
+    from energy_aware_entity_resolution_spark.config import (
+        BlockingConfig,
+        ScoringConfig,
+    )
+
+    monkeypatch.setattr(st, "FOLD_EVERY", 1)
+    cfg = PipelineConfig(
+        blocking=BlockingConfig(use_sorted_neighborhood=False),
+        scoring=ScoringConfig(mutual_only=True, ratio_threshold=1.05),
+    )
+    state = str(tmp_path / "fold_crash")
+    batched = transcripts.withColumn(
+        "_b", F.pmod(F.xxhash64("conv_id"), F.lit(4))
+    )
+    for b in range(3):
+        inc.process_one_batch(
+            spark, batched.where(F.col("_b") == b).drop("_b"), cfg, state, b
+        )
+    folds = [
+        f"{state}/features_compact/batch={b}/_SUCCESS" for b in (1, 2)
+    ] + [f"{state}/scored_rounds_compact/round={b}/_SUCCESS" for b in (1, 2)]
+    assert all(os.path.exists(f) for f in folds)
+    # crash: batch 2's folds committed, its commit marker lost
+    (marker,) = [
+        n for n in os.listdir(f"{state}/done") if n.startswith("_DONE_0002_")
+    ]
+    os.remove(f"{state}/done/{marker}")
+    # legacy shape: a pre-StateTree count ledger beside the folds
+    os.makedirs(f"{state}/feat_counts")
+    open(f"{state}/feat_counts/0000", "w").close()
+    with pytest.raises(ValueError, match=re.escape(state)):
+        run_incremental(transcripts, cfg, state, n_batches=4, resume=True)
+    assert last_complete_batch(state) == 1
+    shutil.rmtree(f"{state}/feat_counts")
+    final = run_incremental(transcripts, cfg, state, n_batches=4, resume=True)
+    assert last_complete_batch(state) == 3
+    assert all(os.path.exists(f) for f in folds)
+    batch = run_pipeline(transcripts, cfg)
+    assert _cluster_sets(final) == _cluster_sets(batch.clusters)
+    batch.release()
+
+
 def test_batch_shuffle_partitions_scoped_and_equal(
     spark, transcripts, tmp_path
 ):
