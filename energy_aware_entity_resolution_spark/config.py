@@ -36,7 +36,6 @@ class BlockingConfig:
     #          tasks instead of a straggler (recall-preserving).
     oversize_policy: str = "drop"
     salt_buckets: int = 8
-    qgram_n: int = 3
     sorted_neighborhood_window: int = 4
     use_sorted_neighborhood: bool = True
     # tokens appearing in > this fraction of conversations are corpus
@@ -78,14 +77,12 @@ class ScoringConfig:
     # dynamic_entity_resolution.py:311-324; 0.0 = disabled — rank-1
     # always has s1 >= s2, so the default is a no-op)
     delta_threshold: float = 0.0
-    top_k: int = 10  # D6 neighbor cap (ref top_k 10)
     mutual_only: bool = False  # D3 strict reciprocal-NN
 
 
 @dataclass(frozen=True)
 class ClusterConfig:
     max_iterations: int = 25
-    checkpoint_every: int = 1
 
 
 @dataclass(frozen=True)

@@ -139,13 +139,18 @@ def lsh_pairs(bands: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return out
 
 
-def salted_self_join_pairs(
+def salted_self_join(
     blocks: DataFrame, key_cols: list[str], id_col: str, salt_buckets: int
 ) -> DataFrame:
     """All-pairs within a block via a salted self-join (SURVEY.md §4
     custom work #2): rows are hashed into s sub-buckets; the join runs
     per (bucket_i, bucket_j) pair so one hot block becomes ~s²/2
     balanced tasks instead of one straggler.
+
+    Returns both sides' columns, aliased ``a`` and ``b``, for each pair
+    of rows with different ids: once, with ``a`` in the lower
+    sub-bucket, or twice (both orientations) when they share one. So
+    callers canonicalize with least/greatest and dedupe.
 
     Deterministic salt: pmod(xxhash64(id), s) — no rand(), so replays
     and the two-parallelism bench see identical partitions.
@@ -159,18 +164,22 @@ def salted_self_join_pairs(
         "_i", F.explode(F.sequence(F.lit(0), F.col("_salt")))
     )
     on = key_cols + ["_i", "_j"]
-    a = left.alias("a")
-    b = right.alias("b")
-    # a pair whose smaller id sits in the HIGHER bucket only appears in
-    # the (bigger, smaller) orientation — so filter !=, canonicalize
-    # with least/greatest, then dedupe (same-bucket pairs appear twice).
     return (
-        a.join(b, on=on)
+        left.alias("a")
+        .join(right.alias("b"), on=on)
         .where(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("conv_id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("conv_id_b"),
-        )
+    )
+
+
+def salted_self_join_pairs(
+    blocks: DataFrame, key_cols: list[str], id_col: str, salt_buckets: int
+) -> DataFrame:
+    """(conv_id_a < conv_id_b) pairs within a block, via
+    salted_self_join."""
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return (
+        salted_self_join(blocks, key_cols, id_col, salt_buckets)
+        .select(F.least(a, b).alias("conv_id_a"), F.greatest(a, b).alias("conv_id_b"))
         .dropDuplicates(["conv_id_a", "conv_id_b"])
     )
 

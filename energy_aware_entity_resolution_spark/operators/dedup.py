@@ -18,6 +18,9 @@ from energy_aware_entity_resolution_spark.functions.portable_hash import (
     md5_hash60_col,
     perm_hash_col,
 )
+from energy_aware_entity_resolution_spark.operators.candidates import (
+    salted_self_join,
+)
 
 
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -437,36 +440,18 @@ def embedding_near_dup_pairs(
     )
     if not big:
         return plain
-    # salted branch: same sub-bucket decomposition as
-    # salted_self_join_pairs, but carrying (id, vec) so the verify
-    # cosine computes inside the balanced join
-    s = salt_buckets
-    big_rows = b.where(F.col("bucket").isin(big)).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))
-    )
-    left = big_rows.select(
-        "bucket",
-        F.col(id_col).alias("_ida"),
-        F.col("_vd").alias("_vda"),
-        F.col("_vn").alias("_vna"),
-        F.col("_salt").alias("_i"),
-        F.explode(F.sequence(F.col("_salt"), F.lit(s - 1))).alias("_j"),
-    )
-    right = big_rows.select(
-        "bucket",
-        F.col(id_col).alias("_idb"),
-        F.col("_vd").alias("_vdb"),
-        F.col("_vn").alias("_vnb"),
-        F.col("_salt").alias("_j"),
-        F.explode(F.sequence(F.lit(0), F.col("_salt"))).alias("_i"),
-    )
+    # salted branch: the verify cosine computes inside the balanced join
+    ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
     salted = (
-        left.join(right, ["bucket", "_i", "_j"])
-        .where(F.col("_ida") != F.col("_idb"))
+        salted_self_join(
+            b.where(F.col("bucket").isin(big)), ["bucket"], id_col, salt_buckets
+        )
         .select(
-            F.least("_ida", "_idb").alias(f"{id_col}_a"),
-            F.greatest("_ida", "_idb").alias(f"{id_col}_b"),
-            pair_cos.alias("cosine"),
+            F.least(ida, idb).alias(f"{id_col}_a"),
+            F.greatest(ida, idb).alias(f"{id_col}_b"),
+            _cosine_prenorm(
+                F.col("a._vd"), F.col("b._vd"), F.col("a._vn"), F.col("b._vn"), dim
+            ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
         .dropDuplicates([f"{id_col}_a", f"{id_col}_b"])

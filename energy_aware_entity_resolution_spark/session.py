@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory, between 1 GiB and 48 GiB.
+
+    In local mode the driver JVM is the only executor, but the pandas-UDF
+    Python workers and the rest of the host need memory too, and the
+    heap grows toward its limit before it collects — so a fixed large
+    default starves small hosts. ``SPARK_DRIVER_MEM`` overrides it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = min(max(phys // 4 // 2**20, 1024), 48 * 1024)
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "energy_aware_entity_resolution_spark",
     master: str | None = None,
@@ -41,7 +53,10 @@ def get_spark(
         .master(master)
         # local mode: the driver JVM is the only executor — give it
         # real memory (ignored if a JVM already exists in-process)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

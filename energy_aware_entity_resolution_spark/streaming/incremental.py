@@ -33,11 +33,12 @@ delta dirs. They differ only in the view their fold holds:
   new_root), the C4 component state of threshold mode. Each batch maps
   its new match edges onto current component roots, runs connected
   components on the REDUCED component graph (bounded by the batch's
-  match count), and appends only the roots that changed. Cluster reads
-  resolve the remap chain: a row/byte-guarded driver fast path (same
-  guards as the CC fast path) for small chains, else distributed
-  pointer-jumping self-joins — the chain NEVER collects to the driver
-  above the guard, so a dup-heavy 100 TB corpus cannot OOM it.
+  match count), and appends only the roots that changed. Every
+  new_root is the minimum id of the component it roots, so reads
+  resolve the chains with ``connected_components`` over the remap
+  rows: its guarded driver path for small ledgers (a local relation,
+  which joins by broadcast), else its distributed loop — above that
+  guard the ledger never collects to the driver.
 
 Batch N commits with one empty marker ``done/_DONE_{N:04d}_{md5}``,
 written last (``state.commit``); a killed run resumes from the last
@@ -221,105 +222,26 @@ def _incremental_candidates(
 
 
 # ------------------------------------------------------- component state
-# Driver fast-path guards for remap resolution — same adaptivity
-# principle (and thresholds) as clustering.connected_components: below
-# them, collect + dict path-compression beats a distributed loop; above
-# them the driver MUST NOT hold the chain (batch-0 CC emits one remap
-# row per matched non-root member, so a dup-heavy corpus makes the
-# accumulated remap O(matched records), a driver OOM by design).
-_REMAP_DRIVER_MAX_ROWS = 200_000
-_REMAP_DRIVER_MAX_BYTES = 64 * 1024 * 1024
-
-
-def _collapse_remaps(rows: list) -> dict[str, str]:
-    """Path-compress accumulated (old_root, new_root) merge records
-    into a flat node -> final-root dict. Chain depth grows at most one
-    per batch; compression makes reads O(entries)."""
-    parent: dict[str, str] = {r["old_root"]: r["new_root"] for r in rows}
-
-    def find(x: str) -> str:
-        seen = []
-        while x in parent and parent[x] != x:
-            seen.append(x)
-            x = parent[x]
-        for s in seen:
-            parent[s] = x
-        return x
-
-    return {k: find(k) for k in list(parent)}
-
-
-def _resolve_remaps_distributed(remap: DataFrame) -> DataFrame:
-    """Pointer-jumping path compression as DataFrame self-joins.
-
-    The accumulated remap is a forest (an old_root is demoted exactly
-    once — later batches key their merges by CURRENT roots), and chain
-    depth grows at most one per batch. Each iteration substitutes
-    new_root := remap(new_root) where defined, DOUBLING the resolved
-    depth, so ceil(log2(n_batches)) rounds reach the fixpoint — the
-    reference's propagation (kafkaconsumer.py:549-620) without any
-    driver-side state. Lineage is truncated per round; the loop stops
-    on the first round where no row advances."""
-    resolved = remap.localCheckpoint(eager=True)
-    for _ in range(40):  # depth 2^40 is unreachable (one merge/batch)
-        nxt = resolved.selectExpr("old_root as _k", "new_root as _v")
-        step = (
-            resolved.join(nxt, resolved["new_root"] == nxt["_k"], "left")
-            .select(
-                "old_root",
-                F.coalesce("_v", "new_root").alias("new_root"),
-                F.col("_k").isNotNull().alias("_hopped"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        advanced = step.where("_hopped").limit(1).count()
-        resolved = step.drop("_hopped")
-        if advanced == 0:
-            break
-    return resolved
-
-
 def _read_remap_df(
     spark: SparkSession, state_dir: str, upto_batch: int
-) -> tuple[DataFrame | None, bool]:
-    """(collapsed remap table from batches < upto_batch, is_small).
+) -> DataFrame | None:
+    """(conv_id, component_id) final root of every demoted root in the
+    remap rows of batches < upto_batch, or None when there are none.
 
-    is_small=True means the table came from the guarded driver fast
-    path and is safely broadcastable; False means it was resolved
-    distributively and joins against it must shuffle, not broadcast.
-    """
+    The rows form a forest whose roots are their components' minimum
+    ids, so connected_components over them is the path-compressed
+    chain (its small-graph driver path, or the distributed loop)."""
     path = os.path.join(state_dir, "remaps")
     if not os.path.isdir(path) or not any(
         n.startswith("batch=") and int(n.split("=")[1]) < upto_batch
         for n in os.listdir(path)
     ):
-        return None, True
-    remap = (
-        spark.read.parquet(path)
-        .where(F.col("batch") < upto_batch)
-        .select("old_root", "new_root")
+        return None
+    edges = spark.read.parquet(path).where(F.col("batch") < upto_batch)
+    comp = connected_components(
+        edges.select(F.col("old_root").alias("src"), F.col("new_root").alias("dst"))
     )
-    # one action decides the path AND supplies the fast path's input
-    sample = remap.limit(_REMAP_DRIVER_MAX_ROWS + 1).collect()
-    if len(sample) <= _REMAP_DRIVER_MAX_ROWS:
-        if not sample:
-            return None, True
-        probe = sample[:1000]
-        avg_bytes = sum(
-            len(str(r["old_root"])) + len(str(r["new_root"])) for r in probe
-        ) / len(probe)
-        if avg_bytes * len(sample) <= _REMAP_DRIVER_MAX_BYTES:
-            collapsed = _collapse_remaps(sample)
-            if not collapsed:
-                return None, True
-            return (
-                spark.createDataFrame(
-                    list(collapsed.items()), "old_root string, new_root string"
-                ),
-                True,
-            )
-    del sample
-    return _resolve_remaps_distributed(remap), False
+    return comp.where(F.col("conv_id") != F.col("component_id"))
 
 
 def _merge_step(
@@ -330,23 +252,21 @@ def _merge_step(
     cfg: PipelineConfig,
 ) -> None:
     """Incremental connected components (C4): resolve the batch's match
-    edges to their CURRENT component roots (broadcast remap join), run
+    edges to their CURRENT component roots (remap join), run
     CC on the reduced component graph — bounded by this batch's match
     count, independent of total state — and append only the changed
     roots as remap records."""
     edges = new_matches.select(
         F.col("conv_id_a").alias("u"), F.col("conv_id_b").alias("v")
     )
-    remap, small = _read_remap_df(spark, state_dir, b)
+    remap = _read_remap_df(spark, state_dir, b)
     if remap is not None:
         ru = remap.select(
-            F.col("old_root").alias("u"), F.col("new_root").alias("ru")
+            F.col("conv_id").alias("u"), F.col("component_id").alias("ru")
         )
         rv = remap.select(
-            F.col("old_root").alias("v"), F.col("new_root").alias("rv")
+            F.col("conv_id").alias("v"), F.col("component_id").alias("rv")
         )
-        if small:  # guarded driver path ⇒ broadcastable by construction
-            ru, rv = F.broadcast(ru), F.broadcast(rv)
         edges = (
             edges.join(ru, "u", "left")
             .join(rv, "v", "left")
@@ -370,8 +290,7 @@ def _merge_step(
 
 def resolve_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     """(conv_id, component_id) for every conversation seen so far:
-    feature ids ⟕ path-compressed remap chain (broadcast only when the
-    guarded driver path certified the chain small).
+    feature ids ⟕ path-compressed remap chain (see _read_remap_df).
 
     Global-decision state carries no remap ledger — merge-only remaps
     can't express revocation — so clusters read the ``clusters`` tree
@@ -391,16 +310,14 @@ def resolve_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
             "conv_id",
             F.coalesce("component_id", F.col("conv_id")).alias("component_id"),
         )
-    remap, small = _read_remap_df(spark, state_dir, last + 1)
+    remap = _read_remap_df(spark, state_dir, last + 1)
     if remap is None:
         return all_ids.select(
             "conv_id", F.col("conv_id").alias("component_id")
         )
-    keyed = remap.withColumnRenamed("old_root", "conv_id")
-    if small:
-        keyed = F.broadcast(keyed)
-    return all_ids.join(keyed, "conv_id", "left").select(
-        "conv_id", F.coalesce("new_root", F.col("conv_id")).alias("component_id")
+    return all_ids.join(remap, "conv_id", "left").select(
+        "conv_id",
+        F.coalesce("component_id", F.col("conv_id")).alias("component_id"),
     )
 
 

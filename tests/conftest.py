@@ -16,8 +16,8 @@ def spark():
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
             # the fixtures are a few hundred conversations; without a
-            # cap the heap grows toward get_spark's 48g default and a
-            # 16 GB machine runs out of memory late in the suite
+            # cap the heap grows toward get_spark's default (a quarter
+            # of physical memory), more than the suite needs
             "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "4g"),
         },
     )

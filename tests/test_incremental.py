@@ -3,6 +3,8 @@ result and resumes from a kill (north_rule checkpoint/resume)."""
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from energy_aware_entity_resolution_spark.config import PipelineConfig
@@ -439,61 +441,31 @@ def test_global_mode_rereads_bounded_by_neighborhood(spark, tmp_path, monkeypatc
     full.release()
 
 
-def test_remap_distributed_resolution_no_driver_collect(spark, tmp_path, monkeypatch):
-    """>10⁵ merge records resolved WITHOUT a driver collect: the
-    distributed pointer-jumping path must produce exactly the driver
-    path-compression result, and must never enter _collapse_remaps
-    (the driver dict) when the row guard trips — the 100 TB OOM gate
-    for C4 (reference propagation kafkaconsumer.py:549-620)."""
-    import energy_aware_entity_resolution_spark.streaming.incremental as inc
-
-    state = str(tmp_path / "remap_state")
-    # forest with chain depth 3: 120k a→b, 1k b→c, 100 c→d0 (every
-    # node's final root is d_0); one remap dir per batch, like _merge_step
-    a = spark.range(120_000).selectExpr(
-        "concat('a_', id) as old_root", "concat('b_', id % 1000) as new_root"
-    )
-    b = spark.range(1_000).selectExpr(
-        "concat('b_', id) as old_root", "concat('c_', id % 100) as new_root"
-    )
-    c = spark.range(100).selectExpr(
-        "concat('c_', id) as old_root", "'d_0' as new_root"
-    )
-    for i, df in enumerate((a, b, c)):
-        df.write.mode("overwrite").parquet(f"{state}/remaps/batch={i}")
-
-    driver, small = inc._read_remap_df(spark, state, 10)
-    assert small  # 121.1k rows < default guard: driver path
-
-    def _boom(rows):
-        raise AssertionError("driver path-compression entered under guard")
-
-    monkeypatch.setattr(inc, "_REMAP_DRIVER_MAX_ROWS", 0)
-    monkeypatch.setattr(inc, "_collapse_remaps", _boom)
-    dist, small = inc._read_remap_df(spark, state, 10)
-    assert not small
-    assert dist.count() == 121_100
-    assert dist.exceptAll(driver).count() == 0
-    assert driver.exceptAll(dist).count() == 0
-    assert (
-        dist.select("new_root").distinct().collect()[0]["new_root"] == "d_0"
-    )
-
-
 def test_incremental_distributed_remap_end_to_end(
     spark, transcripts, tmp_path, monkeypatch
 ):
-    """Forcing every remap read down the distributed path still
-    converges to the batch partition (merge_step + resolve_clusters on
-    the shuffle-join branch)."""
+    """Forcing every connected_components call of the incremental path
+    (remap reads and the reduced-graph CC) down the distributed loop
+    still converges to the batch partition (merge_step +
+    resolve_clusters on the shuffle-join branch)."""
+    import energy_aware_entity_resolution_spark.operators.clustering as cl
     import energy_aware_entity_resolution_spark.streaming.incremental as inc
 
-    monkeypatch.setattr(inc, "_REMAP_DRIVER_MAX_ROWS", 0)
-    batch = run_pipeline(transcripts, PipelineConfig())
+    want = _cluster_sets(run_pipeline(transcripts, PipelineConfig()).clusters)
+    monkeypatch.setattr(
+        inc,
+        "connected_components",
+        functools.partial(cl.connected_components, small_graph_threshold=0),
+    )
+
+    def _boom(spark, edges):
+        raise AssertionError("driver union-find entered at threshold 0")
+
+    monkeypatch.setattr(cl, "_driver_union_find", _boom)
     got = run_incremental(
         transcripts, PipelineConfig(), str(tmp_path / "state_dist"), n_batches=3
     )
-    assert _cluster_sets(got) == _cluster_sets(batch.clusters)
+    assert _cluster_sets(got) == want
 
 
 def test_round_evaluation_timeseries(spark, transcripts, labeled_pairs, tmp_path):
@@ -514,17 +486,30 @@ def test_round_evaluation_timeseries(spark, transcripts, labeled_pairs, tmp_path
 
 
 def test_remap_resolution_random_forests(spark, tmp_path, monkeypatch):
-    """Distributed pointer-jumping == driver path-compression on
-    seeded random merge forests of varying depth/shape (each batch
-    merges random current roots, like real incremental CC rounds)."""
+    """The remap reader equals pure-Python path compression on seeded
+    random merge forests of varying depth/shape (each batch merges
+    random current roots, like real incremental CC rounds), on both
+    connected_components paths (driver union-find and distributed)."""
     import random
 
+    import energy_aware_entity_resolution_spark.operators.clustering as cl
     import energy_aware_entity_resolution_spark.streaming.incremental as inc
+
+    def _compress(rows):
+        parent = dict(rows)
+
+        def find(x):
+            while x in parent:
+                x = parent[x]
+            return x
+
+        return {k: find(k) for k in parent}
 
     for seed in (1, 2, 3):
         rnd = random.Random(seed)
         state = str(tmp_path / f"rf{seed}")
         roots = [f"n{i:03d}" for i in range(60)]
+        ledger = []
         for b in range(rnd.randint(2, 5)):
             rows = []
             # merge a random subset of current roots pairwise
@@ -536,18 +521,23 @@ def test_remap_resolution_random_forests(spark, tmp_path, monkeypatch):
                 roots.remove(hi)
             if not rows:
                 rows = [("zzz_dummy", "n000")]
+            ledger += rows
             spark.createDataFrame(
                 rows, "old_root string, new_root string"
             ).write.mode("overwrite").parquet(f"{state}/remaps/batch={b}")
-        driver, small = inc._read_remap_df(spark, state, 10**9)
-        assert small
-        monkeypatch.setattr(inc, "_REMAP_DRIVER_MAX_ROWS", 0)
-        dist, small2 = inc._read_remap_df(spark, state, 10**9)
+        want = _compress(ledger)
+        for threshold in (200_000, 0):
+            monkeypatch.setattr(
+                inc,
+                "connected_components",
+                functools.partial(
+                    cl.connected_components, small_graph_threshold=threshold
+                ),
+            )
+            got = inc._read_remap_df(spark, state, 10**9).collect()
+            assert {r["conv_id"]: r["component_id"] for r in got} == want
+            assert len(got) == len(want)
         monkeypatch.undo()
-        assert not small2
-        got = {(r["old_root"], r["new_root"]) for r in dist.collect()}
-        want = {(r["old_root"], r["new_root"]) for r in driver.collect()}
-        assert got == want
 
 
 def test_round_timeseries_respects_revokes(spark, tmp_path):
